@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
 
 # CDC replay workload (deterministic; log cached across runs per config).
 # Sized so 4N cores still have work per task: 32 input files feed 32 scan
@@ -51,8 +51,11 @@ def build_spark(cpus: int):
     standalone cluster with 2-core executors (cpus/2 executor JVMs) — the
     multi-executor shape the north rule's scaling criterion names."""
     from debezium_connector_cockroachdb_spark.session import build_session
+    from perfbench.harness import driver_memory_mb
 
-    extra = {"spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "48g")}
+    # default heap: a quarter of the host's memory, clamped to 1-8 GiB
+    memory = os.environ.get("SPARK_DRIVER_MEMORY", f"{driver_memory_mb()}m")
+    extra = {"spark.driver.memory": memory}
     # BENCH_EXTRA_CONF: JSON dict of additional spark confs (codec A/Bs,
     # shuffle tuning experiments) applied identically at every level
     extra.update(json.loads(os.environ.get("BENCH_EXTRA_CONF", "{}")))

@@ -11,7 +11,8 @@ CockroachDBTemporalConversions.java). We map each type to
     digit-exact this way; ``get_json_object`` would round-trip through
     double and lose precision — the dbz#2256 regression), and
   * a *post-conversion* Column expression applied after parsing (hex/base64
-    byte decode, temporal normalization, vector literal parse, ...).
+    byte decode, temporal normalization, ...). Vectors need none: the
+    JSON parse type already reads them as ``array<double>``.
 
 Everything is a built-in Spark expression: whole-stage codegen, no Python.
 """
@@ -186,15 +187,6 @@ def convert_date(col: Column) -> Column:
     """C6 — DATE string → DateType (days-since-epoch under Arrow/parquet;
     …Emitter.java:244-256)."""
     return F.to_date(col)
-
-
-def convert_vector(col_or_parsed: Column, already_array: bool = True) -> Column:
-    """C12 — pgvector ``'[1.5,2.5,3.5]'`` → array<double>
-    (…Provider.java:251-259). When the value was parsed as a JSON array by
-    from_json it is already typed; the string-literal path re-parses."""
-    if already_array:
-        return col_or_parsed
-    return F.from_json(col_or_parsed, T.ArrayType(T.DoubleType()))
 
 
 def apply_binary_handling(decoded: Column, mode: str) -> Column:

@@ -35,12 +35,3 @@ def md5_48(col: Column) -> Column:
 MINHASH_P = (1 << 31) - 1
 MINHASH_A = [4097, 5261, 6151, 7177, 8111, 1409, 2693, 3371, 4723, 5881, 6829, 7919, 1201, 2357, 3547, 4441]
 MINHASH_B = [211, 379, 557, 733, 919, 1103, 1301, 1487, 1667, 1861, 2053, 2239, 2423, 2617, 2801, 2971]
-
-
-def minhash_sig(hash_col: Column, j: int) -> Column:
-    """One MinHash band value for a pre-hashed (48-bit) shingle column."""
-    return (hash_col * F.lit(MINHASH_A[j]) + F.lit(MINHASH_B[j])) % F.lit(MINHASH_P)
-
-
-def minhash_duckdb_expr(hash_expr: str, j: int) -> str:
-    return f"(({hash_expr}) * {MINHASH_A[j]} + {MINHASH_B[j]}) % {MINHASH_P}"

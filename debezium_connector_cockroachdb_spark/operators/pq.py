@@ -15,19 +15,19 @@ with IVF cells.
 Spark shapes (what survives 100 TB):
 
 * **train** — k-means per subspace, all ``m`` subspaces trained in the
-  SAME Spark passes: subvectors are exploded to (id, j, subvec) rows and
-  one broadcast-codebook join + two-phase arg-min assigns every subspace
-  at once; re-centering is one (j, code, pos) mean aggregation. Only
-  m × ksub × subdim = dim × ksub floats (the codebook) ever reach the
+  SAME Spark passes: one map-only encode-kernel pass assigns every
+  subspace at once; re-centering is one (j, code, pos) mean aggregation.
+  Only m × ksub × subdim = dim × ksub floats (the codebook) ever reach the
   driver per iteration.
-* **encode** — same broadcast arg-min, then codes collapse to one
-  array<int> row per vector (groupBy id, map-side combinable). The
-  approximate squared norm Σ_j ||codeword_j||² is folded once at encode
-  time, so scoring never re-joins the codebook.
+* **encode** — one map-only Arrow kernel (``_encode_arrow_seq``) folds
+  every (row, subspace, code) squared distance one dimension at a time,
+  bit-identical to a zip_with/aggregate fold, and emits one array<int>
+  code row per vector. The approximate squared norm Σ_j ||codeword_j||²
+  is folded once at encode time, so scoring never re-joins the codebook.
 * **score** — per query a flat m·ksub lookup table of subspace dot
   products is built (tiny: broadcast), and the corpus side is a PURE MAP:
   fold over the codes array gathering LUT entries — no shuffle until the
-  bounded two-stage top-k (similarity._topk_per_query). No UDF anywhere:
+  bounded two-stage top-k (similarity._topk_per_query). No UDF here:
   slice/transform/aggregate higher-order functions, JVM-side.
 
 Determinism contract (what makes the DuckDB oracle able to replay it):
@@ -39,7 +39,8 @@ LUT, ADC, rank) is re-derived independently in SQL.
 
 Reference parity note: the reference connector has no ANN surface; this
 operator extends the training-data suite (SURVEY.md §2 addenda) alongside
-cosine_topk / _lsh / _ivf.
+cosine_topk / _lsh / _ivf. ``cosine_topk_pq_rerank`` adds the exact
+re-rank of the ADC candidate pool.
 """
 
 from __future__ import annotations
@@ -50,14 +51,6 @@ from pyspark.sql import functions as F
 from .similarity import _clean, _flat, _gather, _norm, _row_lengths, _topk_per_query
 
 Codebook = list[tuple[int, int, list[float]]]  # (subspace j, code, codeword)
-
-
-def _sqdist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def _dot_seq(a: Column, b: Column) -> Column:
@@ -176,15 +169,15 @@ def _encode_arrow_seq(
     """Arrow-batched encode that is BIT-IDENTICAL to the retired expr/HOF
     encode (and to the SQL oracle downstream of a staged codebook): every
     subspace distance is folded one dimension at a time across the batch
-    (``acc += (x_d − c_d)²`` — the exact _sqdist left fold), arg-min ties
-    break to the lowest code (np.argmin first-hit on bit-identical
-    distances), codeword norms and the reconstructed ``approx_n2`` fold
-    in the same sequential orders as _dot_seq / the sorted-by-subspace
-    aggregate. Map-only — replaces the explode → broadcast-join →
-    two-phase-argmin chain whose per-element HOF interpretation dominated
-    the PQ rows (guide §4.2). Null / wrong-width rows degrade to null
-    codes. ``carry_vec=True`` passes the double vector through for the
-    training re-center step."""
+    (``acc += (x_d − c_d)²`` — the exact zip_with/aggregate left fold of a
+    squared distance), arg-min ties break to the lowest code (np.argmin
+    first-hit on bit-identical distances), codeword norms and the
+    reconstructed ``approx_n2`` fold in the same sequential orders as
+    _dot_seq / the sorted-by-subspace aggregate. Map-only — replaces the
+    explode → broadcast-join → two-phase-argmin chain whose per-element HOF
+    interpretation dominated the PQ rows (guide §4.2). Null / wrong-width
+    rows degrade to null codes. ``carry_vec=True`` passes the double vector
+    through for the training re-center step."""
     import numpy as np
     import pyarrow as pa
 
@@ -243,93 +236,19 @@ def _encode_arrow_seq(
     )
 
 
-def _encode_arrow(
-    corpus: DataFrame, codebook: Codebook, id_col: str, vec_col: str
-) -> DataFrame:
-    """Arrow-batched encode: one einsum GEMM per batch computes every
-    (row, subspace, code) distance at BLAS throughput — map-only, no
-    explode, no join. The realistic-dimension path (at dim 1536 the
-    per-element HOF distance evaluation of the expr path dominates; see
-    the Arrow-kernel note in similarity.py). Equivalent to the expr
-    encode up to float-summation order (numpy pairwise vs sequential
-    fold) — oracle-gated queries keep kernel='expr'. Rows that are null
-    or not the codebook width get null codes/norm."""
-    import numpy as np
-    import pyarrow as pa
-
-    m = 1 + max(j for j, _c, _cw in codebook)
-    ksub = 1 + max(c for _j, c, _cw in codebook)
-    subdim = len(codebook[0][2])
-    dim = m * subdim
-    cmat = np.zeros((m, ksub, subdim))
-    for j, c, cw in codebook:
-        cmat[j, c] = cw
-    cn2 = (cmat * cmat).sum(axis=2)  # (m, ksub)
-
-    def encode(batches):
-        for b in batches:
-            n = b.num_rows
-            if not n:
-                continue
-            ids = b.column(0)
-            lens = _row_lengths(b.column(1))
-
-            def codes_for(x):
-                xs = x.reshape(len(x), m, subdim)
-                d2 = (
-                    (xs * xs).sum(axis=2)[:, :, None]
-                    - 2.0 * np.einsum("nms,mks->nmk", xs, cmat)
-                    + cn2[None, :, :]
-                )
-                codes = np.argmin(d2, axis=2)  # ties -> lowest code
-                n2 = np.take_along_axis(cn2[None, :, :].repeat(len(x), 0), codes[:, :, None], 2)
-                return codes.astype("int32"), n2[:, :, 0].sum(axis=1)
-
-            if _clean(lens) and int(lens[0]) == dim:
-                codes, n2 = codes_for(_flat(b.column(1)))
-                codes_out = pa.array(codes.tolist(), pa.list_(pa.int32()))
-                n2_out = pa.array(n2, pa.float64())
-            else:
-                valid = lens == dim
-                codes_obj = np.empty(n, dtype=object)
-                n2_obj = np.empty(n, dtype=object)
-                if valid.any():
-                    codes, n2 = codes_for(_gather(b.column(1), valid, lens))
-                    codes_obj[valid] = [c.tolist() for c in codes]
-                    n2_obj[valid] = list(n2)
-                codes_out = pa.array(codes_obj.tolist(), pa.list_(pa.int32()))
-                n2_out = pa.array(n2_obj.tolist(), pa.float64())
-            yield pa.RecordBatch.from_arrays([ids, codes_out, n2_out], ["_id", "codes", "approx_n2"])
-
-    id_type = dict(corpus.dtypes)[id_col]
-    return (
-        corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
-        .mapInArrow(encode, f"_id {id_type}, codes array<int>, approx_n2 double")
-        .withColumnRenamed("_id", id_col)
-    )
-
-
 def pq_encode(
     corpus: DataFrame,
     codebook: Codebook,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "expr",
 ) -> DataFrame:
     """Compress each vector to (id, codes array<int>, approx_n2 double):
     per-subspace arg-min codes (subspace order) plus the reconstructed
     squared norm Σ_j ||codeword_{codes_j}||², folded in subspace order so
     the SQL oracle reproduces the float sum bit-for-bit. Map-only over
-    the scan — the 10^9-row path. ``kernel="expr"`` (the oracle-exact
-    default) runs the sequential-fold Arrow kernel, which reproduces the
-    retired HOF expression chain bit-for-bit at batch speed;
-    ``kernel="arrow"`` batches the arg-min through one einsum GEMM per
-    Arrow batch instead (equivalent up to float-summation order; the
-    realistic-dimension path)."""
-    if kernel == "arrow":
-        return _encode_arrow(corpus, codebook, id_col, vec_col)
-    if kernel != "expr":
-        raise ValueError(f"unknown kernel {kernel!r} (expected 'expr' or 'arrow')")
+    the scan — the 10^9-row path. Runs the sequential-fold Arrow kernel,
+    which reproduces the retired HOF expression chain bit-for-bit at batch
+    speed."""
     return _encode_arrow_seq(corpus, codebook, id_col, vec_col)
 
 
@@ -345,7 +264,6 @@ def cosine_topk_pq(
     codebook: Codebook | None = None,
     encoded: DataFrame | None = None,
     n_vectors: int | None = None,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Approximate top-k by ADC over PQ codes: per query one flat m·ksub
     lookup table of subspace dot products (contrib[j·ksub + code] =
@@ -365,7 +283,7 @@ def cosine_topk_pq(
     ksub = 1 + max(c for _j, c, _cw in codebook)
     subdim = len(codebook[0][2])
     if encoded is None:
-        encoded = pq_encode(corpus, codebook, id_col=id_col, vec_col=vec_col, kernel=kernel)
+        encoded = pq_encode(corpus, codebook, id_col=id_col, vec_col=vec_col)
 
     q = queries.select(
         F.col(query_id_col),
@@ -415,119 +333,6 @@ def cosine_topk_pq(
     return _topk_per_query(scored, query_id_col, k)
 
 
-def cosine_topk_ivfpq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    m: int = 4,
-    ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    codebook: Codebook | None = None,
-    encoded: DataFrame | None = None,
-    assigned: DataFrame | None = None,
-    cents: list[tuple[int, list[float]]] | None = None,
-    n_vectors: int | None = None,
-    kernel: str = "expr",
-) -> DataFrame:
-    """IVF × PQ — the composition a 10^9-vector index actually runs: the
-    IVF coarse quantizer prunes WHICH vectors a query touches
-    (n_probe/n_centroids of the corpus) and the PQ codes shrink WHAT each
-    candidate costs (m LUT lookups over a code array instead of a dim-wide
-    dot product over the float payload — the candidate sweep reads the
-    ~dim/m-times-smaller code table, never the vectors). PQ here encodes
-    raw vectors (IVF-Flat pruning + PQ storage); recall < 1 by design from
-    both stages. Same output shape as the other top-k operators; pass
-    precomputed (codebook, encoded) / (assigned, cents) to reuse indexes.
-    With ``n_probe >= n_centroids`` the result equals ``cosine_topk_pq``
-    on the same codebook (pruning disabled) — the property the composition
-    test pins."""
-    from pyspark.sql import Window
-
-    from .similarity import ivf_assign
-
-    spark = corpus.sparkSession
-    if assigned is None or cents is None:
-        assigned, cents = ivf_assign(
-            corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
-            n_vectors=n_vectors, kernel=kernel,
-        )
-    if codebook is None:
-        codebook = pq_train(
-            corpus, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col, n_vectors=n_vectors
-        )
-    ksub = 1 + max(c for _j, c, _cw in codebook)
-    subdim = len(codebook[0][2])
-    m = 1 + max(j for j, _c, _cw in codebook)
-    if encoded is None:
-        encoded = pq_encode(corpus, codebook, id_col=id_col, vec_col=vec_col, kernel=kernel)
-    coded = encoded.join(assigned.select(F.col(id_col), "_cell"), id_col)
-
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("_qv")
-    ).withColumn("_qnorm", _norm(F.col("_qv")))
-    cent_df = spark.createDataFrame(
-        [(i, list(c)) for i, c in cents], "_cell int, _centroid array<double>"
-    )
-    qdist = q.crossJoin(F.broadcast(cent_df)).select(
-        query_id_col, "_cell", _sqdist(F.col("_qv"), F.col("_centroid")).alias("_d")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("_d").asc(), F.col("_cell").asc())
-    probe = (
-        qdist.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n_probe)
-        .select(query_id_col, "_cell")
-    )
-
-    qsub = q.select(
-        F.col(query_id_col),
-        F.col("_qnorm"),
-        F.posexplode(
-            F.array(*[F.slice(F.col("_qv"), j * subdim + 1, subdim) for j in range(m)])
-        ).alias("_j", "_qsv"),
-    )
-    lut = (
-        qsub.join(F.broadcast(_codebook_df(spark, codebook)), "_j")
-        .select(
-            query_id_col,
-            "_qnorm",
-            F.struct(
-                F.col("_j"), F.col("_code"), _dot_seq(F.col("_qsv"), F.col("_cw")).alias("v")
-            ).alias("_e"),
-        )
-        .groupBy(query_id_col)
-        .agg(
-            F.first("_qnorm").alias("_qnorm"),
-            F.transform(F.array_sort(F.collect_list("_e")), lambda x: x["v"]).alias("_lut"),
-        )
-    )
-    # (query, probed cell, LUT) in one small broadcast table: the corpus
-    # side joins on _cell — only probed cells' codes are ever scored
-    probe_lut = probe.join(lut, query_id_col)
-
-    adot = F.aggregate(
-        F.transform(
-            F.col("codes"),
-            lambda c, j: F.element_at(F.col("_lut"), (j * F.lit(ksub) + c + 1).cast("int")),
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        coded.join(F.broadcast(probe_lut), "_cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.round(adot / (F.col("_qnorm") * F.sqrt(F.col("approx_n2"))), 6).alias("cos_sim"),
-        )
-    )
-    return _topk_per_query(scored, query_id_col, k)
-
-
 def cosine_topk_pq_rerank(
     corpus: DataFrame,
     queries: DataFrame,
@@ -541,7 +346,6 @@ def cosine_topk_pq_rerank(
     codebook: Codebook | None = None,
     encoded: DataFrame | None = None,
     n_vectors: int | None = None,
-    kernel: str = "expr",
 ) -> DataFrame:
     """The production retrieval pattern: ADC over PQ codes retrieves a
     candidate pool of ``c_factor × k`` per query (cheap — m LUT lookups
@@ -562,7 +366,7 @@ def cosine_topk_pq_rerank(
         )
     cand = cosine_topk_pq(
         corpus, queries, k=c_factor * k, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, codebook=codebook, encoded=encoded, kernel=kernel,
+        query_id_col=query_id_col, codebook=codebook, encoded=encoded,
     ).select(query_id_col, "neighbor_id")
 
     from .similarity import cosine

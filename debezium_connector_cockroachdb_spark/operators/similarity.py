@@ -10,6 +10,8 @@
   scan.
 * ``cosine_topk_ivf`` — inverted-file probing: deterministic k-means
   coarse quantizer, queries score only the n_probe nearest cells.
+* ``embedding_near_duplicates`` — all pairs above a cosine threshold,
+  LSH-blocked and scored chunk-pair by chunk-pair.
 
 Scale note (the round-1 lesson): a single ``collect_list`` per query
 buffers O(|corpus|) structs on one reducer — dead at 10^9 rows. Every
@@ -17,7 +19,10 @@ top-k here pre-reduces per input partition (``groupBy(query, partition_id)``
 → slice k) so no aggregation buffer ever exceeds one partition's rows, and
 the final reduce sees only k × #partitions rows per query.
 
-Dot products use ``F.zip_with`` + ``F.aggregate`` — JVM-side, no UDF.
+Each operator has exactly one numeric kernel. The top-k operators score
+with JVM-side expression folds (``F.zip_with`` + ``F.aggregate``, no UDF);
+``embedding_near_duplicates`` buckets and scores with the Arrow
+sequential-fold kernels below, which reproduce those folds bit-for-bit.
 """
 
 from __future__ import annotations
@@ -96,13 +101,9 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    kernel: str = "expr",
 ) -> DataFrame:
     """Exact top-k neighbors per query (self-matches excluded when ids
-    collide). Output: (query_id, neighbor_id, rank, cos_sim).
-    ``kernel="arrow"`` scores via the NumPy batch kernel (see the
-    Arrow-kernel note below)."""
-    cos_fn = _cosine_kernel(kernel)
+    collide). Output: (query_id, neighbor_id, rank, cos_sim)."""
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("_qv"),
@@ -119,7 +120,7 @@ def cosine_topk(
             # rounded BEFORE ranking so tie-breaks are reproducible across
             # engines (two sims rounding equal must fall back to id order)
             F.round(
-                cos_fn(F.col("_qv").cast("array<double>"), F.col("_cv").cast("array<double>")), 6
+                cosine(F.col("_qv").cast("array<double>"), F.col("_cv").cast("array<double>")), 6
             ).alias("cos_sim"),
         )
     )
@@ -163,32 +164,31 @@ def lsh_bucket(vec: Column, n_planes: int = 8) -> Column:
     return acc
 
 
-# ---- Arrow/NumPy kernels: the realistic-dimension scale path ----
+# ---- Arrow sequential-fold kernels: bit-identical to the expr kernels ----
 #
-# The expression kernels above (zip_with/aggregate dot products, per-plane
-# HOF folds) are plan-narrow at any dim, but Catalyst evaluates
-# higher-order functions per ELEMENT on the interpreted path — measured at
-# dim 1536 / 10^5 vectors that interpretation dominates the wall (LSH 681 s,
-# IVF 299 s; tools/ann_highdim.py). The Arrow kernels below batch the same
-# arithmetic through NumPy/BLAS matmuls (one GEMM per Arrow batch) and are
-# the path a 10^9-vector × 1536-dim index actually runs. They are
-# numerically equivalent up to float summation order: a bucket bit or an
-# argmin can flip only on knife-edge sums, so the oracle-gated driver
-# queries keep kernel="expr" while scale runs pass kernel="arrow".
+# Catalyst evaluates the higher-order-function folds above per ELEMENT on
+# the interpreted path (measured at sf1.0: 463 s of interpreted HOF cosine
+# in embedding_near_duplicates). The kernels below run the same arithmetic
+# over a whole Arrow batch while keeping the expression kernels' EXACT
+# left-fold order — ``acc = ((0 + x0·y0) + x1·y1) + ...`` — by accumulating
+# one dimension at a time across the batch (``acc += X[:, d] * Y[:, d]``):
+# each row's partial sums pass through the identical sequence of float64
+# operations as ``F.aggregate(zip_with(...))``, so the results are
+# bit-identical and oracle-gated queries can use them. O(dim) vectorized
+# steps per batch, one Python-boundary crossing per batch.
 #
 # Implementation note: arrow_udf / mapInArrow, NOT pandas_udf — the pandas
 # bridge materializes one ndarray PER ROW and np.stack then re-touches each
-# (measured: +24 s per 10^5×1536 pass, half the kernel's win); the
-# pyarrow ListArray instead exposes the flat value buffer zero-copy
-# (`flatten().reshape(n, dim)` — valid because embeddings are fixed-width,
-# non-null).
+# (measured: +24 s per 10^5×1536 pass); the pyarrow ListArray instead
+# exposes the flat value buffer zero-copy (`flatten().reshape(n, dim)` on a
+# clean batch of fixed-width, non-null rows).
 
-def _flat(v, dim_hint: int = -1):
+def _flat(v):
     """pyarrow list-of-double Array → (n, dim) ndarray, zero-copy.
     FAST PATH ONLY: caller has verified non-null, fixed-width input."""
     import numpy as np
 
-    return np.asarray(v.flatten()).reshape(len(v), dim_hint)
+    return np.asarray(v.flatten()).reshape(len(v), -1)
 
 
 def _row_lengths(v):
@@ -234,30 +234,6 @@ def _plane_matrix(n_planes: int, dim: int):
     )
 
 
-# ---- sequential-fold NumPy kernels: bit-identical to the expr kernels ----
-#
-# The GEMM kernels above trade float-summation ORDER for speed (documented:
-# a bucket bit or a rounded 6th decimal can flip on knife-edge sums, so the
-# oracle-gated queries could not use them). The kernels below keep the
-# expression kernels' EXACT left-fold order — ``acc = ((0 + x0·y0) + x1·y1)
-# + ...`` — by accumulating one dimension at a time across the whole batch
-# (``acc += X[:, d] * Y[:, d]``): each row's partial sums pass through the
-# identical sequence of float64 operations as ``F.aggregate(zip_with(...))``,
-# so the results are bit-identical, while the per-dimension steps are
-# vectorized NumPy instead of per-element Catalyst interpretation (the
-# measured wall at sf1.0: 463 s of interpreted HOF cosine in
-# embedding_near_duplicates). O(dim) vectorized steps per batch.
-
-def _seq_dot_pairs(X, Y):
-    """Row-wise dot products with the expr kernel's sequential fold order."""
-    import numpy as np
-
-    acc = np.zeros(X.shape[0])
-    for d in range(X.shape[1]):
-        acc = acc + X[:, d] * Y[:, d]
-    return acc
-
-
 def _seq_norms(X):
     """Row norms with _norm's sequential fold order (sqrt of Σ v·v)."""
     import numpy as np
@@ -295,8 +271,7 @@ def _seq_plane_sums(X, n_planes: int):
 
 def lsh_bucket_arrow_seq(vec: Column, n_planes: int) -> Column:
     """Sign-LSH bucket ids, BIT-IDENTICAL to ``lsh_bucket`` (sequential
-    per-dimension fold, strict ``> 0`` sign test, exact integer bit sum) —
-    safe for oracle-gated paths, unlike the GEMM ``lsh_bucket_arrow``."""
+    per-dimension fold, strict ``> 0`` sign test, exact integer bit sum)."""
     from pyspark.sql.functions import arrow_udf
 
     @arrow_udf("long")
@@ -326,110 +301,6 @@ def lsh_bucket_arrow_seq(vec: Column, n_planes: int) -> Column:
     return _bucket(vec)
 
 
-def cosine_arrow_seq(a: Column, b: Column) -> Column:
-    """Row-wise cosine, BIT-IDENTICAL to the expr ``cosine`` (sequential
-    folds for dot and both norms, then the same ``dot / (na · nb)``).
-    Pairs whose arrays differ in length yield NULL — matching zip_with's
-    null-padding, which nulls the whole fold."""
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf("double")
-    def _cos(x: pa.Array, y: pa.Array) -> pa.Array:
-        import numpy as np
-
-        la, lb = _row_lengths(x), _row_lengths(y)
-        n = len(la)
-        if not n:
-            return pa.array([], pa.float64())
-
-        def vals_for(xs, ys):
-            return _seq_dot_pairs(xs, ys) / (_seq_norms(xs) * _seq_norms(ys))
-
-        if _clean(la) and _clean(lb) and la[0] == lb[0]:
-            return pa.array(vals_for(_flat(x), _flat(y)))
-        valid = (la >= 0) & (la == lb)
-        out = np.empty(n, dtype=object)
-        for d in np.unique(la[valid]):
-            m = valid & (la == d)
-            out[m] = list(vals_for(_gather(x, m, la), _gather(y, m, lb)))
-        return pa.array(out.tolist(), pa.float64())
-
-    return _cos(a, b)
-
-
-def lsh_bucket_arrow(vec: Column, n_planes: int) -> Column:
-    """Sign-LSH bucket id via one Arrow-batched matmul per batch."""
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf("long")
-    def _bucket(v: pa.Array) -> pa.Array:
-        import numpy as np
-
-        lens = _row_lengths(v)
-        n = len(lens)
-        if not n:
-            return pa.array([], pa.int64())
-        weights = np.int64(1) << np.arange(n_planes, dtype=np.int64)
-
-        def vals_for(x):
-            bits = ((x @ _plane_matrix(n_planes, x.shape[1]).T) > 0).astype(np.int64)
-            return bits @ weights
-
-        if _clean(lens):
-            return pa.array(vals_for(_flat(v)))
-        # dirty batch: bucket each row at ITS length (the expr kernel folds
-        # over whatever length the row has); null rows stay null
-        out = np.empty(n, dtype=object)
-        for d in np.unique(lens[lens >= 0]):
-            m = lens == d
-            out[m] = list(vals_for(_gather(v, m, lens)))
-        return pa.array(out.tolist(), pa.int64())
-
-    return _bucket(vec)
-
-
-def cosine_arrow(a: Column, b: Column) -> Column:
-    """Row-wise cosine of two array columns via batched einsum."""
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf("double")
-    def _cos(x: pa.Array, y: pa.Array) -> pa.Array:
-        import numpy as np
-
-        la, lb = _row_lengths(x), _row_lengths(y)
-        n = len(la)
-        if not n:
-            return pa.array([], pa.float64())
-
-        def vals_for(xs, ys):
-            num = np.einsum("ij,ij->i", xs, ys)
-            den = np.linalg.norm(xs, axis=1) * np.linalg.norm(ys, axis=1)
-            return num / den
-
-        if _clean(la) and _clean(lb) and la[0] == lb[0]:
-            return pa.array(vals_for(_flat(x), _flat(y)))
-        # dirty batch: a pair is computable iff both sides are non-null and
-        # the SAME length (stricter than the expr kernel's silent zip_with
-        # truncation on mismatched widths — a cross-width cosine is
-        # undefined, so it nulls here); grouped by pair length for the GEMM
-        valid = (la >= 0) & (la == lb)
-        out = np.empty(n, dtype=object)
-        for d in np.unique(la[valid]):
-            m = valid & (la == d)
-            out[m] = list(vals_for(_gather(x, m, la), _gather(y, m, lb)))
-        return pa.array(out.tolist(), pa.float64())
-
-    return _cos(a, b)
-
-
-def _cosine_kernel(kernel: str):
-    if kernel == "arrow":
-        return cosine_arrow
-    if kernel == "expr":
-        return cosine
-    raise ValueError(f"unknown kernel {kernel!r} (expected 'expr' or 'arrow')")
-
-
 def cosine_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,
@@ -439,7 +310,6 @@ def cosine_topk_lsh(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     n_vectors: int | None = None,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket.
     Same output shape as cosine_topk (recall < 1 by design).
@@ -451,22 +321,18 @@ def cosine_topk_lsh(
     ``n_vectors`` supplies the corpus size for that auto-scaling (callers
     with catalog/manifest row counts pass it — at 10^10 rows a full
     ``count()`` job just to size the buckets is gratuitous); when absent
-    the operator counts once. ``kernel="arrow"`` swaps both the bucket
-    computation and the candidate scoring onto the NumPy batch kernels
-    (see the Arrow-kernel note above) — the realistic-dimension path."""
+    the operator counts once."""
     if n_planes is None:
         n_planes = auto_n_planes(corpus.count() if n_vectors is None else n_vectors)
-    bucket_fn = lsh_bucket_arrow if kernel == "arrow" else lsh_bucket
-    cos_fn = _cosine_kernel(kernel)
     c = spread_small_scan(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
-        bucket_fn(F.col(vec_col).cast("array<double>"), n_planes).alias("_bkt"),
+        lsh_bucket(F.col(vec_col).cast("array<double>"), n_planes).alias("_bkt"),
     )
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("_qv"),
-        bucket_fn(F.col(vec_col).cast("array<double>"), n_planes).alias("_bkt"),
+        lsh_bucket(F.col(vec_col).cast("array<double>"), n_planes).alias("_bkt"),
     )
     scored = (
         c.join(F.broadcast(q), "_bkt")
@@ -475,7 +341,7 @@ def cosine_topk_lsh(
             query_id_col,
             "neighbor_id",
             F.round(
-                cos_fn(F.col("_qv").cast("array<double>"), F.col("_cv").cast("array<double>")), 6
+                cosine(F.col("_qv").cast("array<double>"), F.col("_cv").cast("array<double>")), 6
             ).alias("cos_sim"),
         )
     )
@@ -489,7 +355,6 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_vectors: int | None = None,
-    kernel: str = "expr",
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """IVF coarse quantizer: k-means with deterministic seeding (every
     (N/k)-th vector by id order — no RNG, reproducible across runs) and
@@ -497,11 +362,7 @@ def ivf_assign(
     centroid table, re-center via groupBy mean). Returns (corpus + `_cell`
     column, centroid list). At 10^9 vectors the assign pass is map-only
     over the scan; only k×dim floats move to the driver per iteration.
-    Ties in the argmin break toward the lowest cell index.
-    ``kernel="arrow"`` runs the assign step as a batched NumPy GEMM
-    (see the Arrow-kernel note above)."""
-    if kernel not in ("expr", "arrow"):
-        raise ValueError(f"unknown kernel {kernel!r} (expected 'expr' or 'arrow')")
+    Ties in the argmin break toward the lowest cell index."""
     v = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
     n = v.count() if n_vectors is None else n_vectors
     stride = max(n // n_centroids, 1)
@@ -526,44 +387,7 @@ def ivf_assign(
         )
     cents = [(i, list(r["_v"])) for i, r in enumerate(seed_rows)]
 
-    def assign_arrow(df: DataFrame, centroids) -> DataFrame:
-        # Arrow kernel: the k×dim centroid matrix closes over the UDF and
-        # each Arrow batch runs ONE |batch|×dim @ dim×k GEMM + argmin —
-        # map-only, no crossJoin fan-out, BLAS throughput. np.argmin's
-        # lowest-index tie-break matches the expr kernel's ORDER.
-        import numpy as np
-        from pyspark.sql.functions import arrow_udf
-
-        cmat = np.array([list(c) for _i, c in centroids])
-        c_sq = (cmat * cmat).sum(axis=1)
-
-        @arrow_udf("int")
-        def _cell(vs: pa.Array) -> pa.Array:
-            lens = _row_lengths(vs)
-            n = len(lens)
-            if not n:
-                return pa.array([], pa.int32())
-
-            def cells_for(x):
-                d2 = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ cmat.T) + c_sq[None, :]
-                return np.argmin(d2, axis=1).astype("int32")
-
-            if _clean(lens) and int(lens[0]) == cmat.shape[1]:
-                return pa.array(cells_for(_flat(vs)))
-            # dirty batch: only rows matching the centroid width are
-            # assignable; null/ragged rows get a null cell (excluded from
-            # the index rather than a garbage truncated distance)
-            valid = lens == cmat.shape[1]
-            out = np.empty(n, dtype=object)
-            if valid.any():
-                out[valid] = list(cells_for(_gather(vs, valid, lens)))
-            return pa.array(out.tolist(), pa.int32())
-
-        return df.withColumn("_cell", _cell(F.col("_v")))
-
     def assign(df: DataFrame, centroids) -> DataFrame:
-        if kernel == "arrow":
-            return assign_arrow(df, centroids)
         # Cell assignment via broadcast-centroid join + two-phase argmin —
         # the same shape as the probe path below, NOT k literal distance
         # columns + a k-deep CASE chain (correct at k=8, but Catalyst
@@ -612,65 +436,10 @@ def ivf_assign(
             .collect()
         )
 
-    def recenter_rows_arrow(assigned: DataFrame):
-        # Arrow partial reduction: each Arrow batch collapses to ≤k
-        # (cell, sum-vector, count) rows via one numpy groupby-sum —
-        # ~k × #batches rows downstream instead of rows × dim exploded
-        # triples (at dim 1536 / 10^5 vectors the exploded recenter IS the
-        # IVF wall: 153M-row aggregations per Lloyd step). The tiny
-        # partials then posexplode (k·#batches·dim rows, ~10^6) into the
-        # same (cell, pos) weighted mean: sum(_x)/sum(_n) — every partial
-        # appears exactly once per pos, so sum(_n) per (cell,pos) is the
-        # cell's total count.
-        def combine(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            for b in batches:
-                n = b.num_rows
-                if not n:
-                    continue
-                lens = _row_lengths(b.column(1))
-                cells_all = np.asarray(b.column(0).fill_null(-1), dtype=np.int64)
-                # a non-null cell implies the assign kernel saw a row of the
-                # centroid width, so the selected rows stack uniformly
-                use = (cells_all >= 0) & (lens >= 0)
-                if not use.any():
-                    continue
-                if _clean(lens) and use.all():
-                    x = _flat(b.column(1))
-                else:
-                    x = _gather(b.column(1), use, lens)
-                cells = cells_all[use]
-                out_c, out_s, out_n = [], [], []
-                for c in np.unique(cells):
-                    m = cells == c
-                    out_c.append(int(c))
-                    out_s.append(x[m].sum(axis=0))
-                    out_n.append(int(m.sum()))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_c, pa.int32()),
-                        pa.array([s.tolist() for s in out_s], pa.list_(pa.float64())),
-                        pa.array(out_n, pa.int64()),
-                    ],
-                    ["_cell", "_sum", "_n"],
-                )
-
-        partial = assigned.select("_cell", "_v").mapInArrow(
-            combine, "_cell int, _sum array<double>, _n long"
-        )
-        return (
-            partial.select("_cell", "_n", F.posexplode("_sum").alias("_pos", "_x"))
-            .groupBy("_cell", "_pos")
-            .agg((F.sum("_x") / F.sum("_n")).alias("_m"))
-            .collect()
-        )
-
     dim = len(cents[0][1])
     for _it in range(n_iters):
         assigned = assign(v, cents)
-        rows = (recenter_rows_arrow if kernel == "arrow" else recenter_rows)(assigned)
+        rows = recenter_rows(assigned)
         acc: dict[int, dict[int, float]] = {}
         for r in rows:
             acc.setdefault(r["_cell"], {})[r["_pos"]] = r["_m"]
@@ -695,7 +464,6 @@ def cosine_topk_ivf(
     assigned: DataFrame | None = None,
     cents: list[tuple[int, list[float]]] | None = None,
     n_vectors: int | None = None,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Approximate top-k via IVF: queries score only against the n_probe
     nearest cells' vectors (the inverted-file scale path — at 10^9 vectors
@@ -712,9 +480,8 @@ def cosine_topk_ivf(
     if assigned is None or cents is None:
         assigned, cents = ivf_assign(
             corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
-            n_vectors=n_vectors, kernel=kernel,
+            n_vectors=n_vectors,
         )
-    cos_fn = _cosine_kernel(kernel)
     spark = corpus.sparkSession
 
     cent_df = spark.createDataFrame(
@@ -744,21 +511,20 @@ def cosine_topk_ivf(
         .select(
             query_id_col,
             F.col(id_col).alias("neighbor_id"),
-            F.round(cos_fn(F.col("_qv"), F.col(vec_col).cast("array<double>")), 6).alias("cos_sim"),
+            F.round(cosine(F.col("_qv"), F.col(vec_col).cast("array<double>")), 6).alias("cos_sim"),
         )
     )
     return _topk_per_query(scored, query_id_col, k)
 
 
-def _chunk_pair_kernel(threshold: float, seq: bool, id_dtype: str):
+def _chunk_pair_kernel(threshold: float, id_dtype: str):
     """mapInArrow kernel over chunk-pair rows: each input row carries two
     chunk groups of (id, vector); the kernel scores every cross pair and
     emits candidates at ``cos >= threshold - 1e-6`` (plus non-finite cos,
     which Spark's NaN-ordering treats as ≥ any threshold) — the caller
     applies the EXACT ``round(cos, 6) >= threshold`` filter in the JVM, so
-    the margin can never change the result set. ``seq=True`` computes dots
-    and norms with the expr kernels' sequential fold order (bit-identical
-    cosines); ``seq=False`` uses GEMM (the high-dim kernel="arrow" path).
+    the margin can never change the result set. Dots and norms use the
+    expr kernels' sequential fold order, so the cosines are bit-identical.
     Pairs are scored only at matching vector lengths (a cross-length pair
     is NULL under zip_with's null padding, i.e. never a result row)."""
     import numpy as np
@@ -797,13 +563,8 @@ def _chunk_pair_kernel(threshold: float, seq: bool, id_dtype: str):
                     if ln not in b_side:
                         continue
                     bids, bmat = b_side[ln]
-                    if seq:
-                        dots = _seq_dot_cross(amat, bmat)
-                        na, nb = _seq_norms(amat), _seq_norms(bmat)
-                    else:
-                        dots = amat @ bmat.T
-                        na = np.linalg.norm(amat, axis=1)
-                        nb = np.linalg.norm(bmat, axis=1)
+                    dots = _seq_dot_cross(amat, bmat)
+                    na, nb = _seq_norms(amat), _seq_norms(bmat)
                     with np.errstate(divide="ignore", invalid="ignore"):
                         cos = dots / (na[:, None] * nb[None, :])
                     if same:
@@ -840,7 +601,6 @@ def embedding_near_duplicates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_vectors: int | None = None,
-    kernel: str = "expr",
     chunk_target: int = 1024,
 ) -> DataFrame:
     """Near-duplicate vector pairs (cos ≥ threshold), LSH-blocked: pairs
@@ -856,21 +616,22 @@ def embedding_near_duplicates(
     ``mapInArrow`` kernel (guide §8: decide with small rows / move payload
     once — the payload is shuffled once into chunk groups, never through a
     pair-level join, and the per-pair arithmetic leaves the interpreted
-    HOF path, measured 463 s → see OPTIMIZATION_r06.md). kernel="expr"
-    keeps the expression kernels' float summation order bit-exactly
-    (sequential per-dimension folds); kernel="arrow" uses GEMM. Ids that
-    are not an integral type fall back to the row-level join."""
+    HOF path, measured 463 s → see OPTIMIZATION_r06.md). Buckets and
+    cosines keep the expression kernels' float summation order bit-exactly
+    (sequential per-dimension folds). The id column must be an integral
+    type; any other type raises ``ValueError``."""
+    id_dtype = dict(df.dtypes).get(id_col)
+    if id_dtype not in _INTEGRAL_DTYPES:
+        raise ValueError(
+            f"embedding_near_duplicates: id column {id_col!r} is {id_dtype}, "
+            f"expected one of {sorted(_INTEGRAL_DTYPES)}"
+        )
     if n_planes is None:
         n_planes = auto_n_planes(df.count() if n_vectors is None else n_vectors)
-    id_dtype = dict(df.dtypes).get(id_col)
-    if kernel not in ("expr", "arrow") or id_dtype not in _INTEGRAL_DTYPES:
-        return _near_duplicates_pairjoin(df, threshold, n_planes, id_col, vec_col, kernel)
-    seq = kernel == "expr"
-    bucket_fn = lsh_bucket_arrow_seq if seq else lsh_bucket_arrow
     v = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
-        bucket_fn(F.col(vec_col).cast("array<double>"), n_planes).alias("_bkt"),
+        lsh_bucket_arrow_seq(F.col(vec_col).cast("array<double>"), n_planes).alias("_bkt"),
     ).filter(F.col("_bkt").isNotNull())
     # bucket sizes → per-bucket chunk count (expected chunk ≈ chunk_target
     # rows); the size table is one row per NON-EMPTY bucket (≈ N/target at
@@ -895,7 +656,7 @@ def embedding_near_duplicates(
         pairs.repartition(npart, "_bkt", "_ca", "_cb")
         .select("_ca", "_cb", "_ia", "_ib")
         .mapInArrow(
-            _chunk_pair_kernel(threshold, seq, _INTEGRAL_DTYPES[id_dtype]),
+            _chunk_pair_kernel(threshold, _INTEGRAL_DTYPES[id_dtype]),
             f"id_a {id_dtype}, id_b {id_dtype}, _cos double",
         )
     )
@@ -904,29 +665,3 @@ def embedding_near_duplicates(
         .filter(F.col("cos_sim") >= threshold)
     )
 
-
-def _near_duplicates_pairjoin(
-    df: DataFrame,
-    threshold: float,
-    n_planes: int,
-    id_col: str,
-    vec_col: str,
-    kernel: str,
-) -> DataFrame:
-    """Row-level within-bucket self-join (the pre-round-6 shape): kept as
-    the fallback for non-integral id types and exotic kernels."""
-    bucket_fn = lsh_bucket_arrow if kernel == "arrow" else lsh_bucket
-    cos_fn = _cosine_kernel(kernel)
-    v = df.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        bucket_fn(F.col(vec_col).cast("array<double>"), n_planes).alias("_bkt"),
-    )
-    a = v.select(F.col(id_col).alias("id_a"), F.col("_v").alias("_va"), "_bkt")
-    b = v.select(F.col(id_col).alias("id_b"), F.col("_v").alias("_vb"), "_bkt")
-    return (
-        a.join(b, "_bkt")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(cos_fn(F.col("_va"), F.col("_vb")), 6).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )

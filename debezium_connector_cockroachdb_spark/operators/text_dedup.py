@@ -163,10 +163,12 @@ def ngram_jaccard_pairs(
     # One structural evaluation of the per-doc array aggregate: joining
     # doc_sets once per pair side re-ran the 10M-row collect_list shuffle
     # TWICE and broadcast one copy arrays-and-all (observed plan: two
-    # ObjectHashAggregate+Exchange subtrees). Instead the (small) pair
-    # set is exploded into role-tagged probe rows and BROADCAST against a
-    # single streamed doc_sets pass; each pair then gathers its two
-    # arrays through one bounded exchange (2 rows/group).
+    # ObjectHashAggregate+Exchange subtrees). Instead the pair set is
+    # exploded into role-tagged probe rows and joined against a single
+    # doc_sets pass; each pair then gathers its two arrays through one
+    # bounded exchange (2 rows/group). The join strategy is left to
+    # AQE / autoBroadcastJoinThreshold: the candidate set grows with the
+    # corpus, so a forced broadcast is not bounded by driver memory.
     doc_sets = sh.groupBy(id_col).agg(F.collect_list("shingle").alias("_set"))
     cand_ids = cand.select(
         "id_a",
@@ -178,7 +180,7 @@ def ngram_jaccard_pairs(
             )
         ).alias("_e"),
     ).select("id_a", "id_b", F.col("_e._id").alias("_id"), F.col("_e._r").alias("_r"))
-    j = doc_sets.join(F.broadcast(cand_ids), F.col(id_col) == F.col("_id"))
+    j = doc_sets.join(cand_ids, F.col(id_col) == F.col("_id"))
     out = (
         j.groupBy("id_a", "id_b")
         .agg(
@@ -360,16 +362,6 @@ def simhash(df: DataFrame, bits: int = 32, text_col: str = "text", id_col: str =
         F.lit(0).cast("long"),
     )
     return agg.select(F.col(id_col), fp.alias("simhash"))
-
-
-def simhash_duplicates(df: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact-fingerprint SimHash collisions (Hamming distance 0)."""
-    return (
-        simhash(df, bits, text_col, id_col)
-        .groupBy("simhash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def simhash_near_duplicates(

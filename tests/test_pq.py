@@ -120,55 +120,6 @@ def test_pq_topk_recovers_strong_neighbors(spark):
     assert hits >= 4, top1
 
 
-def test_ivfpq_full_probe_equals_pq(spark):
-    """With n_probe >= n_centroids the IVF stage prunes nothing, so
-    IVF×PQ must reduce exactly to plain PQ/ADC on the same codebook."""
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cb = pq.pq_train(emb, m=4, ksub=8, n_iters=1)
-    full = pq.cosine_topk_ivfpq(
-        emb, q, k=4, n_centroids=4, n_probe=4, codebook=cb
-    ).collect()
-    plain = pq.cosine_topk_pq(emb, q, k=4, codebook=cb).collect()
-    assert sorted(map(tuple, full)) == sorted(map(tuple, plain))
-
-
-def test_ivfpq_pruned_probe_subsets_cells(spark):
-    """With n_probe=1 every reported neighbor must live in its query's
-    nearest IVF cell (the pruning actually prunes)."""
-    from debezium_connector_cockroachdb_spark.operators.similarity import ivf_assign
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    assigned, cents = ivf_assign(emb, n_centroids=4)
-    cb = pq.pq_train(emb, m=4, ksub=8, n_iters=1)
-    got = pq.cosine_topk_ivfpq(
-        emb, q, k=4, n_probe=1, codebook=cb, assigned=assigned, cents=cents
-    ).collect()
-    cell_of = {r["vec_id"]: r["_cell"] for r in assigned.select("vec_id", "_cell").collect()}
-    for r in got:
-        assert cell_of[r["neighbor_id"]] == cell_of[r["query_id"]], r
-
-
-def test_arrow_encode_matches_expr_encode(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cb = pq.pq_train(emb, m=4, ksub=8, n_iters=1)
-    a = {r["vec_id"]: r for r in pq.pq_encode(emb, cb, kernel="expr").collect()}
-    b = {r["vec_id"]: r for r in pq.pq_encode(emb, cb, kernel="arrow").collect()}
-    assert set(a) == set(b)
-    same = sum(1 for k in a if list(a[k]["codes"]) == list(b[k]["codes"]))
-    # identical up to knife-edge float argmin flips (none expected on
-    # this data, but the contract is summation-order equivalence)
-    assert same >= 0.99 * len(a), (same, len(a))
-    for k in a:
-        if list(a[k]["codes"]) == list(b[k]["codes"]):
-            assert abs(a[k]["approx_n2"] - b[k]["approx_n2"]) < 1e-9
-
-
 def test_arrow_encode_null_and_ragged_rows_degrade_to_null(spark):
     rows = [
         (1, [1.0, 0.0, 2.0, 0.0]),
@@ -176,7 +127,7 @@ def test_arrow_encode_null_and_ragged_rows_degrade_to_null(spark):
         (3, [1.0, 0.0]),  # wrong width
     ]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    got = {r["vec_id"]: r for r in pq.pq_encode(df, CB, kernel="arrow").collect()}
+    got = {r["vec_id"]: r for r in pq.pq_encode(df, CB).collect()}
     assert list(got[1]["codes"]) == [0, 0] and got[1]["approx_n2"] == 5.0
     assert got[2]["codes"] is None and got[2]["approx_n2"] is None
     assert got[3]["codes"] is None and got[3]["approx_n2"] is None

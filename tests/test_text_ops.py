@@ -73,8 +73,6 @@ def test_simhash_collides_only_normalized_identical(spark, docs):
     fps = {r["doc_id"]: r["simhash"] for r in text_dedup.simhash(docs, bits=32).collect()}
     assert fps[1] == fps[2]
     assert fps[1] != fps[3]
-    dups = text_dedup.simhash_duplicates(docs, bits=32).collect()
-    assert len(dups) == 1 and dups[0]["n_docs"] == 2
 
 
 VECS = [
@@ -504,83 +502,57 @@ def test_ann_plan_width_dim_independent(spark):
     assert big < small * 1.5 + 2000, (small, big)
 
 
-def test_ann_arrow_kernel_equivalence(spark, vecs):
-    """The Arrow/NumPy kernels (batched GEMM) must produce the SAME
-    results as the expression kernels on clearly-separated vectors (the
-    two differ only in float summation order, which can matter only on
-    knife-edge sign/argmin boundaries absent here): identical top-k
-    rankings, identical IVF cell assignments and centroids, identical
-    near-dup pair sets."""
-    q = vecs.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    for fn, kw in (
-        (similarity.cosine_topk, dict(k=2)),
-        (similarity.cosine_topk_lsh, dict(k=2, n_planes=4)),
-        (similarity.cosine_topk_ivf, dict(k=2, n_centroids=2, n_probe=1)),
-    ):
-        expr = rows(fn(vecs, q, kernel="expr", **kw))
-        arrow = rows(fn(vecs, q, kernel="arrow", **kw))
-        assert expr == arrow, fn.__name__
-
-    e_pairs = rows(similarity.embedding_near_duplicates(vecs, threshold=0.99, n_planes=4))
-    a_pairs = rows(
-        similarity.embedding_near_duplicates(vecs, threshold=0.99, n_planes=4, kernel="arrow")
-    )
-    assert e_pairs == a_pairs
-
-    ae, ce = similarity.ivf_assign(vecs, n_centroids=2)
-    aa, ca = similarity.ivf_assign(vecs, n_centroids=2, kernel="arrow")
-    assert {(r["vec_id"], r["_cell"]) for r in ae.collect()} == {
-        (r["vec_id"], r["_cell"]) for r in aa.collect()
-    }
-    for (ie, ve), (ia, va) in zip(ce, ca):
-        assert ie == ia
-        assert all(abs(x - y) < 1e-9 for x, y in zip(ve, va))
-
-
 def test_ann_arrow_kernel_null_and_ragged(spark):
-    """Arrow kernels must DEGRADE like the expression kernels on dirty
-    vectors, not crash the task on a reshape mismatch: null embeddings
-    yield null outputs; a ragged row still buckets at its own length
-    (expr folds whatever length it sees) but cross-width cosine is null."""
+    """The Arrow sequential-fold kernels must DEGRADE like the expression
+    kernels on dirty vectors, not crash the task on a reshape mismatch: a
+    null embedding gets a null bucket and joins no pair; a ragged row
+    buckets exactly like ``lsh_bucket`` at its own length, but never pairs
+    with a row of another width (zip_with null-pads, nulling the cosine)."""
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0, 0.0]),
+        (1, [0.999, 0.01, 0.0, 0.0]),
         (2, None),
-        (3, [1.0, 2.0]),
+        (3, [1.0, 0.0]),  # same sign buckets as 0, other width
+        (4, [1.0, 0.0]),
+        (5, [1.0, 1.0, 0.0, 0.0]),  # plane 0 sums to exactly 0: bit stays 0
     ]
+    # one partition -> one Arrow batch, so the kernels take the dirty path
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
     got = {
-        r["vec_id"]: r["b"]
+        r["vec_id"]: (r["seq"], r["expr"])
         for r in df.select(
-            "vec_id", similarity.lsh_bucket_arrow(F.col("embedding"), 4).alias("b")
+            "vec_id",
+            similarity.lsh_bucket_arrow_seq(F.col("embedding"), 4).alias("seq"),
+            similarity.lsh_bucket(F.col("embedding"), 4).alias("expr"),
         ).collect()
     }
-    assert got[2] is None
-    assert got[0] is not None and got[1] is not None and got[3] is not None
-    # ragged row buckets identically to the expr kernel at its own length
-    expr_b = df.filter(F.col("vec_id") == 3).select(
-        similarity.lsh_bucket(F.col("embedding"), 4).alias("b")
-    ).first()["b"]
-    assert got[3] == expr_b
+    assert got[2][0] is None  # (lsh_bucket's when/otherwise maps null to 0)
+    assert all(s == e and s is not None for i, (s, e) in got.items() if i != 2), got
+    assert got[0][0] == got[3][0]  # the cross-width pair shares a bucket
 
-    pair = (
-        df.alias("a").crossJoin(df.alias("b")).select(
-            F.col("a.vec_id").alias("ia"),
-            F.col("b.vec_id").alias("ib"),
-            similarity.cosine_arrow(F.col("a.embedding"), F.col("b.embedding")).alias("c"),
-        )
-    )
-    cs = {(r["ia"], r["ib"]): r["c"] for r in pair.collect()}
-    assert cs[(0, 1)] is not None and cs[(0, 1)] > 0.9
-    assert cs[(0, 2)] is None      # null side
-    assert cs[(0, 3)] is None      # cross-width pair: undefined, nulled
-    assert cs[(3, 3)] is not None  # equal-width ragged pair computes
+    pairs = similarity.embedding_near_duplicates(df, threshold=0.99, n_planes=4).collect()
+    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(0, 1), (3, 4)}
+
+
+def test_lsh_bucket_arrow_seq_bit_identical_to_expr(spark):
+    """The near-dup gate's blocking runs ``lsh_bucket_arrow_seq``; its
+    DuckDB oracle replays ``lsh_bucket``'s fold. Every row of the real
+    embeddings table must land in the same bucket under both kernels."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    v = F.col("embedding").cast("array<double>")
+    for n_planes in (3, 6, 12):
+        diff = emb.filter(
+            ~similarity.lsh_bucket_arrow_seq(v, n_planes).eqNullSafe(
+                similarity.lsh_bucket(v, n_planes)
+            )
+        ).count()
+        assert diff == 0, (n_planes, diff)
+
+
+def test_near_duplicates_rejects_non_integral_ids(spark):
+    df = spark.createDataFrame([("a", [1.0, 0.0])], "vec_id string, embedding array<double>")
+    with pytest.raises(ValueError, match="vec_id"):
+        similarity.embedding_near_duplicates(df, n_planes=2)
 
 
 # ---------------- boilerplate n-gram detection ----------------
