@@ -249,7 +249,6 @@ def _run_schema_evolution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_buckets=8,
         max_files_per_trigger=1,
         drift_mode="exact",
-        collect_metrics=False,
     )
     pipe = CDCPipeline(spark, icfg)  # init at registry v1: table lacks lang
     land_ddl()  # the DDL lands while the connector runs

@@ -118,7 +118,6 @@ def bench_cdc_apply(spark) -> tuple[float, dict]:
         # throughput mode favors large batches — per-batch fixed costs
         # (commit, listing, planning, broadcast builds) amortize
         max_files_per_trigger=int(os.environ.get("BENCH_TRIGGER_FILES", max(N_FILES // 2, 1))),
-        collect_metrics=True,
         merge_mode=MERGE_MODE,
         mor_skip_batch_dedup=bool(os.environ.get("BENCH_MOR_NODEDUP")),
         # compaction-cadence A/B: ratio 0 reproduces the pure file-count

@@ -37,8 +37,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..session import observed
 
 
 def _symmetric(e: DataFrame) -> DataFrame:
@@ -257,16 +259,13 @@ def connected_components(
         """Stage the round's edge set; when ``with_sig``, the fixed-point
         signature RIDES the staging write via ``observe`` (the same
         rider pattern as the CDC pipeline's batch stats) instead of
-        costing a separate per-round aggregation job. Fallback: a
-        degenerate plan (e.g. a zero-row write under AQE) can complete
-        without materializing the observe node — recompute from the
-        staged parquet, which holds the identical rows."""
+        costing a separate per-round aggregation job. When the observe
+        metrics are not posted (see ``session.observed``), it is recomputed
+        from the staged parquet, which holds the identical rows."""
         sig = None
         if scratch_dir:
             path = os.path.join(scratch_dir, f"cc_{run_tag}_{i % 2}")
             if with_sig:
-                from pyspark.sql import Observation
-
                 obs = Observation()
                 df = df.observe(
                     obs,
@@ -279,11 +278,8 @@ def connected_components(
             df.write.mode("overwrite").option("compression", "snappy").parquet(path)
             staged = spark.read.parquet(path)
             if with_sig:
-                try:
-                    m = obs.get
-                    sig = (m["n"], m["h"])
-                except Exception:
-                    sig = _sig(staged)
+                m = observed(obs, fallback=lambda: dict(zip(("n", "h"), _sig(staged))))
+                sig = (m["n"], m["h"])
             return staged, sig
         staged = df.localCheckpoint(eager=True)
         # localCheckpoint's materialization isn't a DataFrame action, so

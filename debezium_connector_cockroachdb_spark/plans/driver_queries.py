@@ -15,8 +15,13 @@ Portability rules learned the hard way (see functions/hashing.py):
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import uuid
 from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,76 +45,98 @@ _WORK = os.path.join(
 )
 
 
-def _stage_root() -> str:
+# /dev/shm must have more than this many times a stage's input bytes free
+# before the stage goes there: tmpfs pages are RAM, and the stages built
+# from `documents` (shingles, signatures, stream-dedup batches and runs)
+# add up to ~12x its parquet bytes at sf0.01
+_TMPFS_HEADROOM = 64
+
+
+def _input_marker(sf_dir: str, tables: list[str]) -> tuple:
+    """Sorted (relpath, size, mtime_ns) of every file under each input
+    ``{sf_dir}/{table}.parquet`` (a single file or a directory of parts)."""
+    out = []
+    for t in tables:
+        root = os.path.join(sf_dir, f"{t}.parquet")
+        paths = [root] if os.path.isfile(root) else [
+            os.path.join(d, f) for d, _, files in os.walk(root) for f in files
+        ]
+        for p in paths:
+            st = os.stat(p)
+            out.append((os.path.relpath(p, sf_dir), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _stage_root(marker: tuple = ()) -> str:
     """Scratch root for Spark-side-only staging (shingles, signatures, CC
     rounds). Mirrors bench.py's BENCH_TMPFS policy: in local mode every
     staged byte funnels through ONE virtio disk, which a real cluster's
     per-executor disks would not; tmpfs keeps the measurement about the
-    engine (bench.py applies the same policy to its own scratch). Staging
+    engine (bench.py applies the same policy to its own scratch). tmpfs is
+    used only while it has room for ``marker``'s inputs (_TMPFS_HEADROOM). Staging
     that the frozen oracle SQL reads back (PQ codebooks, IVF centroids)
     stays under _WORK — those paths are embedded in the oracle text."""
     if os.environ.get("BENCH_TMPFS", "1") == "1" and os.path.isdir("/dev/shm"):
-        return "/dev/shm/spark_graft_qstage"
+        need = _TMPFS_HEADROOM * sum(size for _rel, size, _mtime in marker)
+        if shutil.disk_usage("/dev/shm").free > need:
+            return "/dev/shm/spark_graft_qstage"
     return _WORK
+
+
+# every staged intermediate of this process, keyed by (kind, sf_dir,
+# params, input marker): a stage is a deterministic function of its inputs'
+# content, so a table regenerated in place misses and rebuilds. Directory
+# stages hold their path as a str (perfbench's reset_stage_caches removes
+# those); value stages hold what their build returned.
+_STAGE: dict[tuple, Any] = {}
+
+
+def _stage_once(
+    kind: str, sf_dir: str, tables: list[str], params: tuple, build: Callable[[str], Any]
+) -> Any:
+    """``build(path)`` once per key; later calls return its memoized result.
+    ``path`` is ``<stage root>/<kind>/<md5(key)[:12]>``: directory stages
+    write there and return it, value stages ignore it."""
+    marker = _input_marker(sf_dir, tables)
+    key = (kind, sf_dir, params, marker)
+    if key not in _STAGE:
+        digest = hashlib.md5(repr(key).encode()).hexdigest()[:12]
+        _STAGE[key] = build(os.path.join(_stage_root(marker), kind, digest))
+    return _STAGE[key]
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# shared shingle staging: ngram_jaccard, minhash_signatures,
-# minhash_lsh_pairs and benchmark_contamination all consume the SAME
-# (doc_id, shingle) explode of `documents` — materializing it once per
-# (process, sf_dir) and letting every consumer (and every bench repeat)
-# re-read the parquet saves ~1/3 of the shingle family's wall with
-# byte-identical results. Process-local keying keeps it stale-proof:
-# a new process always re-stages.
-_SHINGLE_STAGE: dict[tuple[str, int], str] = {}
-
-
 def _staged_shingles(spark: SparkSession, sf_dir: str, n: int = 5) -> DataFrame:
-    key = (sf_dir, n)
-    path = _SHINGLE_STAGE.get(key)
-    if path is None:
-        import hashlib
+    """The (doc_id, shingle) explode of `documents` that ngram_jaccard,
+    minhash_signatures, minhash_lsh_pairs and benchmark_contamination all
+    consume, staged once: re-reading the parquet saves ~1/3 of the shingle
+    family's wall with byte-identical results."""
 
-        # the readable tag alone can collide ('/a/b_c' vs '/a/b/c' both
-        # flatten to 'a_b_c'); the digest makes the path injective in
-        # sf_dir so two datasets can never share a staging directory
-        tag = sf_dir.strip("/").replace("/", "_")
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(_stage_root(), "shingle_cache", f"{tag}_{digest}_n{n}")
+    def build(path: str) -> str:
         # spread the (single-row-group, unsplittable) documents scan so
         # the shingle explode runs on every core, not 1-2 tasks
         text_dedup.shingle_table(
             similarity.spread_small_scan(_t(spark, sf_dir, "documents")), n=n
         ).write.mode("overwrite").parquet(path)
-        _SHINGLE_STAGE[key] = path
-    return spark.read.parquet(path)
+        return path
 
-
-# shared MinHash-signature staging (same contract and rationale as the
-# shingle staging above): minhash_lsh_pairs and dedup_clusters both
-# consume the SAME k-wide signature table; staging it once per
-# (process, sf_dir) replaces a per-call recompute+rewrite. Process-local
-# keying keeps it stale-proof.
-_MINHASH_SIG_STAGE: dict[tuple[str, int], str] = {}
+    return spark.read.parquet(_stage_once("shingles", sf_dir, ["documents"], (n,), build))
 
 
 def _staged_minhash_sig(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    key = (sf_dir, k)
-    path = _MINHASH_SIG_STAGE.get(key)
-    if path is None:
-        import hashlib
+    """The k-wide signature table minhash_lsh_pairs and dedup_clusters both
+    consume, staged once instead of recomputed per call."""
 
-        tag = sf_dir.strip("/").replace("/", "_")
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(_stage_root(), "minhash_sig_cache", f"{tag}_{digest}_k{k}")
+    def build(path: str) -> str:
         text_dedup.minhash_signatures(
             None, k, shingles=_staged_shingles(spark, sf_dir)
         ).write.mode("overwrite").parquet(path)
-        _MINHASH_SIG_STAGE[key] = path
-    return spark.read.parquet(path)
+        return path
+
+    return spark.read.parquet(_stage_once("minhash_sig", sf_dir, ["documents"], (k,), build))
 
 
 def _op_col() -> F.Column:
@@ -254,8 +281,6 @@ def q_table_changes_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     events LWW batch applied as v2, then ``table_changes(v1)`` must emit
     exactly the row-level diffs — update_postimage for surviving events,
     delete (with pre-image) where the last event is an error."""
-    import shutil
-
     from pyspark.sql import types as T
 
     from ..sources.lake import SnapshotTable
@@ -503,8 +528,6 @@ def q_schema_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds columns with defaults — a literal default ('PENDING', 42) fills
     pre-DDL rows at read; a function default (now()) stays null
     (CockroachDBDefaultValueConverter.java:41-59,164-210)."""
-    import shutil
-
     from pyspark.sql import types as T
 
     from ..functions.converters import ColumnSpec
@@ -585,8 +608,6 @@ def q_multitable_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
                             key%5==0
 
     plus resolved control rows that advance BOTH frontiers."""
-    import shutil
-
     from ..streaming.multitable import MultiTablePipeline
     from ..streaming.pipeline import CDCPipeline, IngestConfig
 
@@ -718,7 +739,6 @@ def q_backfill_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard makes the backfill fill only keys the stream has not touched —
     the seed-overlay semantics the SQL oracle recomputes."""
     import json as _json
-    import shutil
 
     from ..streaming.backfill import process_signals
     from ..streaming.pipeline import CDCPipeline, IngestConfig
@@ -921,17 +941,16 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str, engine: str = "pandas") -> 
     ``engine="jvm"`` runs the same workload through the native
     dropDuplicates state store (bench A/B only — its intra-batch winner is
     first-received, not min-id, so it can't face the min-id oracle)."""
-    import shutil
-
     from ..streaming.stream_dedup import streaming_exact_dedup
 
     # the 3 source batches are a pure re-layout of documents.parquet —
-    # staged once per (process, sf_dir) like the shingle table; only the
-    # stream OUTPUT / checkpoint / state store are per-call state (fresh
-    # dir per run, previous one removed)
+    # staged once like the shingle table; only the stream OUTPUT /
+    # checkpoint / state store are per-call state, in a fresh dir per call
+    # (removed at exit) so an earlier call's still-lazy result keeps its files
     src = _staged_stream_dedup_src(spark, sf_dir)
-    run_base = os.path.join(_stage_root(), "stream_dedup", f"run_{engine}")
-    shutil.rmtree(run_base, ignore_errors=True)
+    root = _stage_root(_input_marker(sf_dir, ["documents"]))
+    run_base = os.path.join(root, "stream_dedup", f"run_{engine}_{uuid.uuid4().hex[:12]}")
+    atexit.register(shutil.rmtree, run_base, ignore_errors=True)
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -952,44 +971,33 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str, engine: str = "pandas") -> 
     )
 
 
-_STREAM_SRC_STAGE: dict[str, str] = {}
-
-
 def _staged_stream_dedup_src(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the 3 deterministic micro-batch source files once per
-    (process, sf_dir): batches 0/1 split the corpus by key parity, batch 2
-    is a formatting-noise variant of EVERY document (upper-case + extra
+    """Stage the 3 deterministic micro-batch source files once: batches
+    0/1 split the corpus by key parity, batch 2 is a formatting-noise variant of EVERY document (upper-case + extra
     whitespace — identical fingerprint) arriving later; mtimes force the
     b0 < b1 < b2 admission order. The stream must suppress all of batch 2
     via cross-batch state for the row set to match the oracle."""
-    import hashlib
     import time as _time
 
-    path = _STREAM_SRC_STAGE.get(sf_dir)
-    if path is not None:
-        return path
-    tag = sf_dir.strip("/").replace("/", "_")
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    src = os.path.join(_stage_root(), "stream_dedup", f"src_{tag}_{digest}")
-    import shutil
+    def build(src: str) -> str:
+        shutil.rmtree(src, ignore_errors=True)
+        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+        batches = [
+            d.filter(F.col("doc_id") % 2 == 0),
+            d.filter(F.col("doc_id") % 2 == 1),
+            d.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
+                     F.concat(F.upper("text"), F.lit("  ")).alias("text")),
+        ]
+        for b, bdf in enumerate(batches):
+            bdf.coalesce(1).write.parquet(os.path.join(src, f"b{b}"))
+        t0 = int(_time.time()) - 3600
+        for b in range(3):
+            bd = os.path.join(src, f"b{b}")
+            for fn in os.listdir(bd):
+                os.utime(os.path.join(bd, fn), (t0 + b, t0 + b))
+        return src
 
-    shutil.rmtree(src, ignore_errors=True)
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    batches = [
-        d.filter(F.col("doc_id") % 2 == 0),
-        d.filter(F.col("doc_id") % 2 == 1),
-        d.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                 F.concat(F.upper("text"), F.lit("  ")).alias("text")),
-    ]
-    for b, bdf in enumerate(batches):
-        bdf.coalesce(1).write.parquet(os.path.join(src, f"b{b}"))
-    t0 = int(_time.time()) - 3600
-    for b in range(3):
-        bd = os.path.join(src, f"b{b}")
-        for fn in os.listdir(bd):
-            os.utime(os.path.join(bd, fn), (t0 + b, t0 + b))
-    _STREAM_SRC_STAGE[sf_dir] = src
-    return src
+    return _stage_once("stream_dedup_src", sf_dir, ["documents"], (), build)
 
 
 SQL_STREAM_DEDUP = """
@@ -1020,7 +1028,6 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a window row appears iff window_end <= max(event time) - delay
     (the final no-data micro-batch advances the watermark over all data)
     — so even the stateful windowed operator faces a value-exact oracle."""
-    import shutil
     import time as _time
 
     from ..streaming.windowed import windowed_event_counts
@@ -1731,7 +1738,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig=_staged_minhash_sig(spark, sf_dir, MINHASH_K_ORACLE),
     )
     return components.dedup_clusters(
-        docs, pairs, scratch_dir=os.path.join(_stage_root(), "cc_stage"),
+        docs, pairs,
+        scratch_dir=os.path.join(_stage_root(_input_marker(sf_dir, ["documents"])), "cc_stage"),
         # minhash_lsh_pairs emits each pair exactly once (first matching
         # band) with id_a < id_b, so CC skips its defensive 29M-group
         # distinct and runs the oriented round-1 large-star
@@ -1896,28 +1904,42 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cos_sim FROM ranked WHE
 
 _PQ_CODEBOOK = os.path.join(_WORK, "pq_codebook")
 
-# shared PQ-codebook staging (same contract and rationale as the shingle /
-# signature staging): pq_train is deterministic in (corpus, m, ksub,
-# n_vectors), and BOTH PQ gates train the identical codebook, so training
-# once per (process, sf_dir) replaces a per-call Lloyd re-run — the very
-# split the round-5 review asked for ("stage the codebook once per bench
-# run"; the rows previously measured training variance, not retrieval).
-# Process-local keying keeps it stale-proof; the parquet staging each
-# query writes for its oracle is unchanged (and byte-identical per run).
-_PQ_CB_STAGE: dict[tuple[str, int, int], tuple[int, list]] = {}
-
-
 def _staged_pq_codebook(spark: SparkSession, sf_dir: str, m: int, ksub: int):
-    key = (sf_dir, m, ksub)
-    hit = _PQ_CB_STAGE.get(key)
-    if hit is None:
+    """(row count, trained codebook) of `embeddings`, staged as a value:
+    pq_train is deterministic in (corpus, m, ksub, n_vectors), and BOTH PQ
+    gates train the identical codebook, so training once replaces a
+    per-call Lloyd re-run. The parquet each query writes for its oracle is
+    unchanged (and byte-identical per run)."""
+
+    def build(_path: str) -> tuple[int, list]:
         from ..operators import pq
 
         emb = _t(spark, sf_dir, "embeddings")
         n_emb = emb.count()
-        hit = (n_emb, pq.pq_train(emb, m=m, ksub=ksub, n_vectors=n_emb))
-        _PQ_CB_STAGE[key] = hit
-    return hit
+        return n_emb, pq.pq_train(emb, m=m, ksub=ksub, n_vectors=n_emb)
+
+    return _stage_once("pq_codebook", sf_dir, ["embeddings"], (m, ksub), build)
+
+
+def _write_codebook(stage_dir: str, n_emb: int, codebook: list) -> None:
+    """The codebook and its row-count marker as the parquet the oracle SQL
+    reads back (see _pq_adc_ctes)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq_pa
+
+    os.makedirs(stage_dir, exist_ok=True)
+    tbl = pa.table(
+        {
+            "j": [j for j, _c, _cw in codebook],
+            "code": [c for _j, c, _cw in codebook],
+            "codeword": [cw for _j, _c, cw in codebook],
+        },
+        schema=pa.schema(
+            [("j", pa.int32()), ("code", pa.int32()), ("codeword", pa.list_(pa.float64()))]
+        ),
+    )
+    pq_pa.write_table(tbl, os.path.join(stage_dir, "cb.parquet"))
+    pq_pa.write_table(pa.table({"n_vecs": [n_emb]}), os.path.join(stage_dir, "marker.parquet"))
 PQ_M = 4
 PQ_KSUB = 16
 
@@ -1933,30 +1955,11 @@ def q_ann_cosine_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    # count + codebook come from the per-process staging (the count also
-    # serves the oracle's staleness marker; the manifest/catalog supplies
-    # it in a real deployment)
+    # count + codebook come from the staging (the count also serves the
+    # oracle's staleness marker; the manifest/catalog supplies it in a real
+    # deployment)
     n_emb, codebook = _staged_pq_codebook(spark, sf_dir, PQ_M, PQ_KSUB)
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_pa
-
-    os.makedirs(_PQ_CODEBOOK, exist_ok=True)
-    tbl = pa.table(
-        {
-            "j": [j for j, _c, _cw in codebook],
-            "code": [c for _j, c, _cw in codebook],
-            "codeword": [cw for _j, _c, cw in codebook],
-        },
-        schema=pa.schema(
-            [("j", pa.int32()), ("code", pa.int32()), ("codeword", pa.list_(pa.float64()))]
-        ),
-    )
-    pq_pa.write_table(tbl, os.path.join(_PQ_CODEBOOK, "cb.parquet"))
-    pq_pa.write_table(
-        pa.table({"n_vecs": [n_emb]}),
-        os.path.join(_PQ_CODEBOOK, "marker.parquet"),
-    )
+    _write_codebook(_PQ_CODEBOOK, n_emb, codebook)
     return pq.cosine_topk_pq(emb, queries, k=3, codebook=codebook)
 
 
@@ -2056,30 +2059,9 @@ def q_ann_cosine_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
     # identical (m, ksub) params as the plain PQ gate -> one shared
-    # trained codebook per process (see _staged_pq_codebook)
+    # trained codebook (see _staged_pq_codebook)
     n_emb, codebook = _staged_pq_codebook(spark, sf_dir, PQ_M, PQ_KSUB)
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_pa
-
-    os.makedirs(_PQ_RR_CODEBOOK, exist_ok=True)
-    pq_pa.write_table(
-        pa.table(
-            {
-                "j": [j for j, _c, _cw in codebook],
-                "code": [c for _j, c, _cw in codebook],
-                "codeword": [cw for _j, _c, cw in codebook],
-            },
-            schema=pa.schema(
-                [("j", pa.int32()), ("code", pa.int32()), ("codeword", pa.list_(pa.float64()))]
-            ),
-        ),
-        os.path.join(_PQ_RR_CODEBOOK, "cb.parquet"),
-    )
-    pq_pa.write_table(
-        pa.table({"n_vecs": [n_emb]}),
-        os.path.join(_PQ_RR_CODEBOOK, "marker.parquet"),
-    )
+    _write_codebook(_PQ_RR_CODEBOOK, n_emb, codebook)
     return pq.cosine_topk_pq_rerank(
         emb, queries, k=PQ_RERANK_K, c_factor=PQ_RERANK_C // PQ_RERANK_K, codebook=codebook
     )

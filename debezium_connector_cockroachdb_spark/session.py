@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with scale-appropriate defaults, and the one reader
+of ``observe()`` metrics.
 
 Local-mode testing stands in for a multi-executor cluster; every setting here
 is chosen to also be correct at 1000 executors (AQE, skew-join handling,
@@ -8,8 +9,12 @@ UTC session time, Arrow batches for the pandas-UDF paths).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
+from pyspark.sql import Observation, SparkSession
 
 
 def build_session(
@@ -54,3 +59,26 @@ def build_session(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def observed(
+    obs: Observation, fallback: Callable[[], dict[str, Any]] | None = None
+) -> dict[str, Any]:
+    """The metrics of ``obs``, read without blocking: ``Observation.get``
+    waits without bound, and a degenerate plan (e.g. one the optimizer
+    folds to an empty local relation) can finish without running the
+    observe node, which completes the observation with an empty row. Drains
+    the listener bus that posts the metrics (within Spark's own wait
+    limit), then returns them if posted, else ``fallback()``, else raises
+    ``RuntimeError``."""
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        try:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+        except Py4JJavaError:  # bus still busy at the wait limit: judge what was posted
+            pass
+    if obs._jo is not None and obs._jo.future().isCompleted() and obs._jo.getRow().length():
+        return obs.get
+    if fallback is None:
+        raise RuntimeError("observe() metrics were never posted: the observed plan did not run")
+    return fallback()

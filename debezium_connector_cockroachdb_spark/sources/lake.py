@@ -44,6 +44,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import observed
+
+# forced-broadcast cap for the CoW merge's update side (rows): the serial
+# driver-side hash build is still 3x cheaper than AQE's sort-merge of the
+# payload side at micro-batch scale
+_BROADCAST_THRESHOLD = 2_000_000
+
 META_COLS = ["_deleted", "_commit_wall_ns", "_commit_logical", "_commit_seq"]
 
 _META_FIELDS = [
@@ -296,7 +303,6 @@ class SnapshotTable:
         updates: DataFrame,
         batch_key: str,
         frontier_hlc: str | None = None,
-        broadcast_threshold: int = 2_000_000,
         frontier_provider=None,
     ) -> dict[str, Any]:
         """Dispatch on the table's write mode.
@@ -318,7 +324,7 @@ class SnapshotTable:
         """
         if self.merge_mode == "mor":
             return self._merge_mor(spark, updates, batch_key, frontier_hlc, frontier_provider)
-        return self._merge_cow(spark, updates, batch_key, frontier_hlc, broadcast_threshold, frontier_provider)
+        return self._merge_cow(spark, updates, batch_key, frontier_hlc, frontier_provider)
 
     def _merge_cow(
         self,
@@ -326,7 +332,6 @@ class SnapshotTable:
         updates: DataFrame,
         batch_key: str,
         frontier_hlc: str | None = None,
-        broadcast_threshold: int = 2_000_000,
         frontier_provider=None,
     ) -> dict[str, Any]:
         """Apply a deduped update set (ONE row per pk — caller runs
@@ -405,7 +410,7 @@ class SnapshotTable:
             # single-threaded on the driver (measured serial-fraction
             # killer); above the threshold AQE picks the join from runtime
             # stats of the staged files
-            if n_updates <= broadcast_threshold:
+            if n_updates <= _BROADCAST_THRESHOLD:
                 u_rows = F.broadcast(u_rows)
 
             tgt = self._read_files(spark, target_files)
@@ -456,7 +461,7 @@ class SnapshotTable:
             )
             sid = self.meta["current_schema_id"]
             new_files = _collect_data_files(self.path, out_dir, rel_dir, sid, pk=pk)
-            stats = {k: int(v) for k, v in obs.get.items()}
+            stats = {k: int(v) for k, v in observed(obs).items()}
         else:
             stats = {"rows_written": 0, "deleted": 0, "updated": 0, "inserted": 0, "stale_or_kept": 0}
         stats["pruned_files"] = pruned_files

@@ -79,12 +79,7 @@ def run_incremental_snapshot(
             F.lit(-1).cast("long").alias("seq"),
         )
         aligned = _align(updates, table)
-        s = table.merge(
-            pipeline.spark,
-            aligned,
-            batch_key=f"backfill:{signal_id}:{chunk}",
-            broadcast_threshold=pipeline.cfg.broadcast_threshold,
-        )
+        s = table.merge(pipeline.spark, aligned, batch_key=f"backfill:{signal_id}:{chunk}")
         s["chunk"] = chunk
         pipeline._write_metrics(-2, "backfill", s, extra={})
         stats.append(s)

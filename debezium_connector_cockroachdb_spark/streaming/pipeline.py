@@ -20,8 +20,10 @@ yields byte-identical table state.
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
+import logging
 import os
 import time
 from dataclasses import dataclass, field
@@ -34,8 +36,11 @@ from pyspark.sql import types as T
 from ..functions.converters import ColumnSpec, spark_output_type
 from ..functions.hlc import hlc_logical, hlc_string, hlc_wall_ns
 from ..operators.dedup import dedupe_batch
+from ..session import observed
 from ..sources.envelope import RAW_LOG_SCHEMA, parse_changefeed
 from ..sources.lake import SnapshotTable
+
+log = logging.getLogger(__name__)
 
 # max poison offsets collected to the driver per batch (~800 KB of longs);
 # beyond this the quarantine write re-derives is_malformed executor-side
@@ -86,11 +91,6 @@ class IngestConfig:
     snapshot_mode: str = "initial"  # CockroachDBConnectorConfig.java:561-656
     max_files_per_trigger: int | None = None
     snapshot_wall_ns: int = 0  # commit-ts assigned to op='r' backfill rows
-    collect_metrics: bool = True
-    # forced-broadcast cap for the merge's update side (rows): the serial
-    # driver-side hash build is still 3x cheaper than AQE's sort-merge of
-    # the payload side at micro-batch scale
-    broadcast_threshold: int = 2_000_000
     errors_path: str | None = None  # dead-letter quarantine for poison events (X3)
     merge_mode: str = "cow"  # "cow" (read-optimized) | "mor" (write-optimized)
     mor_max_deltas_per_bucket: int = 8
@@ -301,9 +301,7 @@ class CDCPipeline:
         )
         updates = _align_updates(updates, self.table.schema)
         t0 = time.time()
-        stats = self.table.merge(
-            self.spark, updates, key, broadcast_threshold=self.cfg.broadcast_threshold
-        )
+        stats = self.table.merge(self.spark, updates, key)
         self._write_metrics(-1, "snapshot", stats, extra={"wall_ms": (time.time() - t0) * 1e3})
         return stats
 
@@ -451,27 +449,16 @@ class CDCPipeline:
         else:
             updates = self._to_updates(dedupe_batch(data, "pk"))
 
-        obs_cache: dict[str, Any] = {}
+        def batch_agg() -> dict[str, Any]:
+            # a degenerate plan can finish without running the observe node
+            log.warning("batch %d: observe metrics not posted; aggregating directly", batch_id)
+            row = self._batch_agg(parsed, with_keys=False).asDict()
+            fr = row["fr"]
+            return {**row, "fr_enc": None if fr is None else fr["w"] * 10_000_000_000 + fr["l"]}
 
+        @functools.cache
         def obs_metrics() -> dict[str, Any]:
-            """Observation metrics with a direct-agg fallback: degenerate
-            plans (e.g. a zero-row staged write under AQE) can complete
-            without materializing the observe node."""
-            if obs_cache:
-                return obs_cache
-            try:
-                obs_cache.update(obs.get)
-            except Exception:
-                import sys as _sys
-
-                print(f"[cdc] observe fallback fired for batch {batch_id}", file=_sys.stderr)
-                row = self._batch_agg(parsed, with_keys=False)
-                obs_cache.update({k: row[k] for k in (
-                    "n_raw", "n_control", "n_malformed", "n_keyless", "min_seq", "max_seq",
-                    "bad_seqs")})
-                fr = row["fr"]
-                obs_cache["fr_enc"] = None if fr is None else fr["w"] * 10_000_000_000 + fr["l"]
-            return obs_cache
+            return observed(obs, fallback=batch_agg)
 
         def frontier_from_obs():
             enc = obs_metrics().get("fr_enc")
@@ -485,14 +472,11 @@ class CDCPipeline:
             updates,
             batch_key=f"stream:{batch_id}",
             frontier_hlc=frontier,
-            broadcast_threshold=self.cfg.broadcast_threshold,
             frontier_provider=None if exact else frontier_from_obs,
         )
         if not stats.get("skipped"):
             if agg is None:
-                o = obs_metrics()
-                agg = {k: o[k] for k in ("n_raw", "n_control", "n_malformed", "n_keyless",
-                                         "min_seq", "max_seq", "bad_seqs")}
+                agg = obs_metrics()
             n_raw, n_control = int(agg["n_raw"]), int(agg["n_control"] or 0)
             n_malformed = int(agg["n_malformed"] or 0)
             # quarantine poison records instead of killing the stream (X3 —
@@ -723,7 +707,7 @@ class CDCPipeline:
     # ------------- lineage (§2.6 aggregations) -------------
 
     def _write_metrics(self, batch_id: int, phase: str, stats: dict[str, Any], extra: dict[str, Any]) -> None:
-        if not (self.cfg.collect_metrics and self.cfg.metrics_path):
+        if not self.cfg.metrics_path:
             return
         row = {f.name: None for f in METRICS_SCHEMA.fields}
         row.update(batch_id=batch_id, phase=phase, committed_at=time.time())

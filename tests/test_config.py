@@ -283,8 +283,7 @@ def test_kafka_soak_surrogate_state_equivalence(spark, tmp_path):
     def run_parquet():
         icfg = IngestConfig(log_dir=log, table_path=str(tmp_path / "t_parquet"),
                             checkpoint_dir=str(tmp_path / "ckpt"),
-                            num_buckets=8, max_files_per_trigger=2,
-                            collect_metrics=False)
+                            num_buckets=8, max_files_per_trigger=2)
         pipe = CDCPipeline(spark, icfg)
         pipe.run_to_completion(seed_df=seed_table(spark, gcfg))
         return pipe
@@ -303,7 +302,7 @@ def test_kafka_soak_surrogate_state_equivalence(spark, tmp_path):
         )
         mapped = map_kafka_records(consumer_shaped)
         icfg = IngestConfig(log_dir=log, table_path=str(tmp_path / "t_kafka"),
-                            num_buckets=8, collect_metrics=False)
+                            num_buckets=8)
         pipe = CDCPipeline(spark, icfg)
         pipe.run_snapshot(seed_table(spark, gcfg))
         # three micro-batches split on the raw offset ranges (batch
@@ -364,7 +363,7 @@ def test_json_source_format_state_equivalence(spark, tmp_path):
         icfg = IngestConfig(log_dir=src, table_path=str(tmp_path / f"t_{fmt}"),
                             checkpoint_dir=str(tmp_path / f"ckpt_{fmt}"),
                             num_buckets=8, max_files_per_trigger=2,
-                            source_format=fmt, collect_metrics=False)
+                            source_format=fmt)
         pipe = CDCPipeline(spark, icfg)
         pipe.run_to_completion(seed_df=seed_table(spark, gcfg))
         cols = [f.name for f in pipe.table.schema.fields]
@@ -455,7 +454,7 @@ def test_mid_partition_resume_stored_plus_one(spark, tmp_path):
     batch1 = part_filter(tagged, stored, None).drop("partition_id")
 
     icfg = IngestConfig(log_dir=log, table_path=str(tmp_path / "t_resume"),
-                        num_buckets=8, collect_metrics=False)
+                        num_buckets=8)
     pipe = CDCPipeline(spark, icfg)
     pipe.run_snapshot(seed_table(spark, gcfg))
     s0 = pipe.process_batch(batch0, batch_id=0)
@@ -482,7 +481,7 @@ def test_mid_partition_resume_stored_plus_one(spark, tmp_path):
 
     # one-shot replay of the same kafka-shaped records = identical state
     icfg2 = IngestConfig(log_dir=log, table_path=str(tmp_path / "t_oneshot"),
-                         num_buckets=8, collect_metrics=False)
+                         num_buckets=8)
     ref = CDCPipeline(spark, icfg2)
     ref.run_snapshot(seed_table(spark, gcfg))
     ref.process_batch(mapped, batch_id=0)

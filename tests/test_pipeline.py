@@ -381,3 +381,31 @@ def test_default_value_applied_on_evolution(spark, tmp_path):
     assert all(r["status"] == "PENDING" for r in old)   # literal default
     assert all(r["score"] == 42 for r in old)
     assert all(r["created"] is None for r in old)       # function default -> null
+
+
+def test_unposted_observe_falls_back_to_direct_aggregation(spark, tmp_path, monkeypatch):
+    """A batch whose observe() metrics are never posted aggregates the
+    batch directly: same counts, offsets, frontier and state as the
+    observe path."""
+    import dataclasses
+
+    from debezium_connector_cockroachdb_spark.streaming import pipeline as pipeline_mod
+
+    gcfg, icfg, log_dir, seed = build_env(spark, tmp_path)
+    raw = spark.read.parquet(log_dir)
+
+    def run(name):
+        pipe = CDCPipeline(spark, dataclasses.replace(
+            icfg, table_path=str(tmp_path / name), metrics_path=str(tmp_path / f"{name}_m")))
+        pipe.run_snapshot(seed)
+        return pipe, pipe.process_batch(raw, batch_id=0)
+
+    ref, ref_stats = run("observed")
+    monkeypatch.setattr(pipeline_mod, "observed", lambda obs, fallback=None: fallback())
+    fb, fb_stats = run("fallback")
+    keys = ["n_raw", "n_control", "n_malformed", "n_keyless", "min_seq", "max_seq",
+            "frontier_hlc", "inserted", "updated", "deleted"]
+    assert {k: fb_stats.get(k) for k in keys} == {k: ref_stats.get(k) for k in keys}
+    assert fb_stats["frontier_hlc"] is not None
+    assert sorted(normalize(fb.read_state().collect()), key=lambda r: r["doc_id"]) == sorted(
+        normalize(ref.read_state().collect()), key=lambda r: r["doc_id"])

@@ -3,6 +3,7 @@ ADC arithmetic on a tiny constructed codebook, plus train→encode→score
 determinism on the real embeddings table."""
 
 import math
+import os
 
 from pyspark.sql import functions as F
 
@@ -166,3 +167,30 @@ def test_pq_rerank_scores_are_exact_cosines(spark):
     assert got
     for r in got:
         assert r["cos_sim"] == exact_all[(r["query_id"], r["neighbor_id"])], r
+
+
+def test_staged_codebook_retrains_when_embeddings_regenerated(spark, tmp_path):
+    """The staged codebook is keyed on the input files, not the row count:
+    rewriting embeddings.parquet in place with the same number of rows but
+    different vectors must retrain, and give what a fresh training gives."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq_pa
+
+    from debezium_connector_cockroachdb_spark.plans import driver_queries as dq
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    path = os.path.join(sf, "embeddings.parquet")
+    t = pq_pa.read_table(f"{SF}/embeddings.parquet")
+    pq_pa.write_table(t, path)
+    n1, cb1 = dq._staged_pq_codebook(spark, sf, dq.PQ_M, dq.PQ_KSUB)
+
+    flipped = pa.array([[-x for x in v] for v in t.column("embedding").to_pylist()],
+                       t.schema.field("embedding").type)
+    pq_pa.write_table(t.set_column(1, "embedding", flipped), path)
+    n2, cb2 = dq._staged_pq_codebook(spark, sf, dq.PQ_M, dq.PQ_KSUB)
+
+    assert n1 == n2 == t.num_rows
+    assert cb2 != cb1
+    emb = spark.read.parquet(path)
+    assert cb2 == pq.pq_train(emb, m=dq.PQ_M, ksub=dq.PQ_KSUB, n_vectors=n2)

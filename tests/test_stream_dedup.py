@@ -181,3 +181,29 @@ def test_streaming_dedup_rejects_unknown_engine(spark):
     )
     with _pytest.raises(ValueError, match="unknown engine"):
         streaming_exact_dedup(df, engine="nope")
+
+
+def test_q_stream_dedup_back_to_back_results_stay_readable(spark, tmp_path):
+    """Each q_stream_dedup call writes its stream output to its own
+    directory: a second call must not remove the files an earlier call's
+    (lazy) result still reads, and that result must equal the oracle."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from debezium_connector_cockroachdb_spark.plans import driver_queries as dq
+
+    sf = str(tmp_path)
+    texts = ["alpha beta", "Alpha  Beta ", "gamma", "delta", "gamma"] * 8
+    pq.write_table(pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()), "text": texts}),
+                   os.path.join(sf, "documents.parquet"))
+    first = dq.q_stream_dedup(spark, sf)
+    second = dq.q_stream_dedup(spark, sf)
+    cols = ["fp", "doc_id", "n_dropped_before_emit"]
+    got = sorted(tuple(r) for r in first.select(*cols).collect())
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')")
+    want = sorted(con.sql(f"SELECT {', '.join(cols)} FROM ({dq.SQL_STREAM_DEDUP})").fetchall())
+    assert got == want
+    assert sorted(tuple(r) for r in second.select(*cols).collect()) == want
