@@ -119,7 +119,6 @@ def bench_cdc_apply(spark) -> tuple[float, dict]:
         # (commit, listing, planning, broadcast builds) amortize
         max_files_per_trigger=int(os.environ.get("BENCH_TRIGGER_FILES", max(N_FILES // 2, 1))),
         merge_mode=MERGE_MODE,
-        mor_skip_batch_dedup=bool(os.environ.get("BENCH_MOR_NODEDUP")),
         # compaction-cadence A/B: ratio 0 reproduces the pure file-count
         # trigger (compaction storm mode), default 0.2 is the shipped policy
         mor_compact_min_delta_ratio=float(os.environ.get("BENCH_MOR_RATIO", "0.2")),

@@ -1,20 +1,25 @@
-"""Event deduplication and per-key last-writer-wins ordering (D1, §2.4).
+"""Per-key last-writer-wins ordering (D1, §2.4): the engine's one arg-max.
 
 Reference: a bounded 10k-entry LRU keyed by ``tableId:op:ts_ns:rowKey``
-(CockroachDBStreamingChangeEventSource.java:85-104, createEventId :882-893).
-The identity MUST include the message key (two rows of one transaction share
-``ts_ns`` — dbz#2283) and the table id (same-named tables across schemas).
+(CockroachDBStreamingChangeEventSource.java:85-104, createEventId :882-893)
+drops redeliveries, then events apply in commit order, last wins.
 
-Spark-first re-expression:
-  * exact-duplicate drop = ``dropDuplicates`` on the same identity tuple —
-    unbounded-safe because it is batch-local (idempotent MERGE handles
-    cross-batch replays, so no 10k-LRU memory bound is needed at all);
-  * per-key ordering = an **arg-max aggregation**, not a window sort:
-    ``groupBy(pk).agg(max(struct(ordering..., payload)))`` gets map-side
-    partial aggregation (each input partition reduces its own hot keys
-    before the shuffle), so a key with 10^6 updates ships ~#partitions rows
-    instead of 10^6 — this is the hot-key-skew story at 10^10 events.
-    A window ``row_number()`` would shuffle and sort every row.
+Spark-first re-expression: both collapse into one rule — per key, the event
+with the greatest ordering tuple wins — and the same primitive,
+``argmax_rows``, serves the micro-batch (``dedupe_batch``), the MoR
+read-time resolution and compaction (``sources/lake.py``). No identity
+``dropDuplicates`` runs: a redelivery under a fresh offset carries the same
+payload, so either copy wins equivalently; a redelivery under the same
+offset repeats the full tuple and collapses in ``dedupe_batch``'s per-key
+dedup; cross-batch replays are no-ops by the merge guard, so no LRU memory
+bound is needed at all.
+
+Per-key ordering is an **arg-max aggregation**, not a window sort: the
+ordering tuple's ``max(struct(...))`` gets map-side partial aggregation
+(each input partition reduces its own hot keys before the shuffle), so a
+key with 10^6 updates ships ~#partitions rows instead of 10^6 — the
+hot-key-skew story at 10^10 events. A window ``row_number()`` would shuffle
+and sort every row.
 
 Ordering key: (commit_wall_ns, commit_logical, seq) — HLC order with the
 log offset as tie-break, matching the reference's arrival-order application
@@ -26,63 +31,52 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-EVENT_IDENTITY = ["table_name", "op", "commit_wall_ns", "commit_logical", "pk"]
 ORDERING = ["commit_wall_ns", "commit_logical", "seq"]
 
 
-def drop_duplicate_events(df: DataFrame) -> DataFrame:
-    """Exact redelivery drop (at-least-once upstream → effectively-once)."""
-    return df.dropDuplicates(EVENT_IDENTITY)
+def argmax_rows(df: DataFrame, pk_col: str, ordering: list[str]) -> DataFrame:
+    """The rows of ``df`` holding each key's greatest ``ordering`` tuple,
+    in ``df``'s column layout.
 
+    Two-phase arg-max: phase 1 aggregates ONLY the ordering tuple per key —
+    map-side combinable, and the aggregation never touches the nested
+    payload (a payload-wide ``max(struct(...))`` forces ObjectHashAggregate
+    into its sort-based fallback past 128 groups; measured 64s vs ~4s on a
+    2M-row batch). Phase 2 joins the winners back; the winner side is
+    (pk + the tuple) so the shuffle-hash build is tiny, and the payload side
+    is hashed, never sorted. Catalyst folds the ordering-equality filter
+    into the join keys, so the payload shuffle hashes on (tuple, pk) —
+    which also spreads a hot key's rows across partitions (skew-immune,
+    unlike a pk-partitioned window).
 
-def last_writer_wins(df: DataFrame, pk_col: str = "pk", broadcast_keys: bool = True) -> DataFrame:
-    """One surviving event per key: max (commit_wall_ns, commit_logical,
-    seq). Returns the original column layout, one row per key.
-
-    Two-phase arg-max: phase 1 aggregates ONLY the 3-long ordering key per
-    pk (map-side combinable, tiny shuffle — a hot key with 10^6 updates
-    ships ~#partitions 24-byte rows); phase 2 joins the winners back to
-    fetch payloads. The naive ``max(struct(ordering, payload))`` would
-    shuffle and struct-compare the full nested payload — measured 64s vs
-    ~4s on a 2M-row batch at 32 cores (ObjectHashAggregate falls back to
-    sort-based beyond 128 groups and sorting nested arrays is brutal).
-
-    ``broadcast_keys=True`` (default) broadcasts the winner set (pk + 3
-    longs). The driver-side hash-relation build is serial (~27% of batch
-    time at 10^5+ keys, capping scaling efficiency near 0.55) but measured
-    3x faster in absolute terms than the AQE sort-merge alternative, which
-    shuffles and sorts the payload side. MoR mode avoids the join — and
-    this tradeoff — entirely."""
+    No trailing dedup: rows sharing a key's full winning tuple all survive.
+    Stored table rows never do — seq is the globally-unique log offset, a
+    micro-batch's offset range never overlaps another's, ``dedupe_batch``
+    leaves one row per key per batch, and replayed batches are dropped by
+    the batch_key guard before anything is written — and a
+    ``dropDuplicates`` here would re-introduce exactly the payload-wide
+    aggregate this function exists to avoid (Catalyst plans it as a
+    first(<payload>) aggregate over nested arrays)."""
     win = df.groupBy(pk_col).agg(
-        F.max(F.struct(*[F.col(c) for c in ORDERING])).alias("_win")
-    ).select(
-        F.col(pk_col).alias("_w_pk"),
-        *[F.col(f"_win.{c}").alias(f"_w_{c}") for c in ORDERING],
+        F.max(F.struct(*[F.col(c) for c in ordering])).alias("_win")
     )
-    if broadcast_keys:
-        win = F.broadcast(win)
-    cond = (F.col(pk_col) == F.col("_w_pk"))
-    for c in ORDERING:
-        cond = cond & (F.col(c) == F.col(f"_w_{c}"))
-    # redelivered copies of the WINNER row (same pk + full ordering tuple —
-    # possible when the source's seq is only per-partition-unique, e.g.
-    # Kafka at-least-once re-reads) would all survive the join-back and
-    # violate the CoW merge's one-row-per-pk precondition. Dedup here costs
-    # a shuffle of only the ~#keys winner rows, never the full batch.
-    return df.join(win, on=cond, how="inner").select(*df.columns).dropDuplicates([pk_col])
+    cond = F.lit(True)
+    for c in ordering:
+        cond = cond & (F.col(c) == F.col(f"_win.{c}"))
+    return (
+        df.join(win.hint("shuffle_hash"), pk_col)
+        .filter(cond)
+        .select(*df.columns)
+    )
 
 
 def dedupe_batch(df: DataFrame, pk_col: str = "pk") -> DataFrame:
-    """Batch-local dedup for the apply path.
+    """One surviving event per key of a micro-batch: max (commit_wall_ns,
+    commit_logical, seq). Returns the original column layout.
 
-    NOTE: a full-batch identity ``dropDuplicates`` (the reference's LRU
-    check) is deliberately NOT run here — it is subsumed by
-    last-writer-wins: identity-duplicates carry identical payloads so
-    either copy wins equivalently, the same-HLC delete+insert tie-break
-    rides on ``seq``, and redelivered copies of the winner itself (same
-    full ordering tuple) collapse in the winner-side dedup inside
-    ``last_writer_wins`` — a ~#keys-row shuffle, not a full-batch one.
-    The reference needs the LRU because it re-dispatches events downstream
-    one by one; our sink applies only the per-key winner.
-    ``drop_duplicate_events`` remains available for metrics/audit flows."""
-    return last_writer_wins(df, pk_col)
+    Unlike stored rows, batch input can repeat a full tuple — two copies of
+    one record under the same offset (Kafka at-least-once re-reads, where
+    seq is only per-partition-unique) — and the CoW merge needs one row per
+    key. The per-key ``dropDuplicates`` after the arg-max shuffles only the
+    ~#keys winner rows, never the full batch."""
+    return argmax_rows(df, pk_col, ORDERING).dropDuplicates([pk_col])

@@ -40,10 +40,11 @@ import time
 import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.dedup import argmax_rows
 from ..session import observed
 
 # forced-broadcast cap for the CoW merge's update side (rows): the serial
@@ -52,6 +53,8 @@ from ..session import observed
 _BROADCAST_THRESHOLD = 2_000_000
 
 META_COLS = ["_deleted", "_commit_wall_ns", "_commit_logical", "_commit_seq"]
+# the stored HLC ordering key: per key, the greatest tuple is the state
+_COMMIT_ORDER = META_COLS[1:]
 
 _META_FIELDS = [
     T.StructField("_deleted", T.BooleanType(), False),
@@ -287,7 +290,7 @@ class SnapshotTable:
             return self._read_files(spark, files)
         plain = [fe for fe in files if fe["bucket"] not in delta_buckets]
         mixed = [fe for fe in files if fe["bucket"] in delta_buckets]
-        resolved = _argmax_rows(self._read_files(spark, mixed), self.pk_col)
+        resolved = argmax_rows(self._read_files(spark, mixed), self.pk_col, _COMMIT_ORDER)
         return self._read_files(spark, plain).unionByName(resolved)
 
     def read_state(self, spark: SparkSession) -> DataFrame:
@@ -305,13 +308,19 @@ class SnapshotTable:
         frontier_hlc: str | None = None,
         frontier_provider=None,
     ) -> dict[str, Any]:
-        """Dispatch on the table's write mode.
+        """Apply a deduped update set (ONE row per pk — caller runs
+        ``dedupe_batch`` first; Iceberg MERGE has the same one-match-row
+        rule). Expected update columns: user columns + ``op`` +
+        ``commit_wall_ns`` + ``commit_logical`` + ``seq``. Replayed
+        batch_keys are skipped entirely.
 
         ``frontier_provider`` (optional ``() -> str|None``) is consulted
         right before the metadata commit — it lets callers derive the
         resolved frontier from an ``observe()`` on the update plan itself
-        (available only after the staging action ran) instead of paying a
-        separate aggregation pass.
+        (available only after the write ran) instead of paying a separate
+        aggregation pass.
+
+        The table's write mode supplies the new file list and stats:
 
         * ``cow`` (default) — copy-on-write: join against touched buckets,
           rewrite them. Read-optimized; write cost ∝ touched-bucket size.
@@ -322,54 +331,67 @@ class SnapshotTable:
           update-heavy-workload mode: a micro-batch touching 1% of keys in
           every bucket writes 1% of the data instead of 100%.
         """
-        if self.merge_mode == "mor":
-            return self._merge_mor(spark, updates, batch_key, frontier_hlc, frontier_provider)
-        return self._merge_cow(spark, updates, batch_key, frontier_hlc, frontier_provider)
-
-    def _merge_cow(
-        self,
-        spark: SparkSession,
-        updates: DataFrame,
-        batch_key: str,
-        frontier_hlc: str | None = None,
-        frontier_provider=None,
-    ) -> dict[str, Any]:
-        """Apply a deduped update set (ONE row per pk — caller runs
-        ``dedupe_batch`` first; Iceberg MERGE has the same one-match-row
-        rule). Expected update columns: user columns + ``op`` +
-        ``commit_wall_ns`` + ``commit_logical`` + ``seq``.
-
-        Guard: an update only lands if its (wall, logical, seq) exceeds the
-        stored commit of the matching row — late/stale events are no-ops
-        (FIXTURES scenario 12); replayed batch_keys are skipped entirely.
-        """
         if batch_key in self.meta["applied"]:
             return {"skipped": True, "batch_key": batch_key, "version": self.meta["version"]}
-
-        pk = self.pk_col
-        user_fields = self.schema.fields
-        user_cols = [f.name for f in user_fields]
-        nb = self.meta["num_buckets"]
-
-        # ONE pass over the (parse→dedup) update chain: normalize to the
-        # physical row image and stage it as parquet. Downstream consumers
-        # (bucket probe, both join sides) read the staged columnar files —
-        # deliberately NOT .persist(): Spark's in-memory cache collapses on
-        # nested array/struct rows (70s+ builds vs a sub-second parquet
-        # round-trip) and the update count comes free from the footers.
-        u_rows_plan = updates.select(
-            *[F.col(c) for c in user_cols],
-            F.pmod(F.xxhash64(F.col(pk)), F.lit(nb)).cast("int").alias("_bucket"),
+        # the stored row image: user columns, _bucket, system columns
+        rows = updates.select(
+            *[F.col(f.name) for f in self.schema.fields],
+            self.bucket_expr().alias("_bucket"),
             (F.col("op") == "d").alias("_deleted"),
             F.col("commit_wall_ns").alias("_commit_wall_ns"),
             F.col("commit_logical").alias("_commit_logical"),
             F.col("seq").alias("_commit_seq"),
         )
+        mor = self.merge_mode == "mor"
+        if mor:
+            files, stats = self._merge_mor(spark, rows)
+        else:
+            files, stats = self._merge_cow(spark, rows, batch_key)
+        if frontier_provider is not None and frontier_hlc is None:
+            frontier_hlc = frontier_provider()
+        stats["frontier_hlc"] = frontier_hlc
+        version = self._commit(
+            files, {"op": "merge-mor" if mor else "merge", "batch_key": batch_key, **stats},
+            batch_key=batch_key, frontier_hlc=frontier_hlc,
+        )
+        out = {"skipped": False, "batch_key": batch_key, "version": version, **stats}
+        if mor:
+            # auto-compaction: a bucket compacts when its delta FILE count
+            # passes the soft trigger AND its delta ROWS reach
+            # compact_min_delta_ratio of its base rows (LSM-style size-ratio —
+            # see the property docstrings: the file trigger alone forces a
+            # full-table rewrite every max_deltas batches once steady
+            # micro-batches touch every bucket), or unconditionally at the
+            # hard file cap (read health). Manifests written before row counts
+            # existed fall back to the file trigger alone.
+            to_compact = self._compaction_victims(self.meta["files"])
+            if to_compact:
+                out["compacted_buckets"] = len(to_compact)
+                t0 = time.time()
+                out["version"] = self.compact(spark, to_compact)["version"]
+                out["compact_secs"] = round(time.time() - t0, 3)
+        return out
+
+    def _merge_cow(
+        self, spark: SparkSession, u_rows_plan: DataFrame, batch_key: str
+    ) -> tuple[list[dict[str, Any]], dict[str, Any]]:
+        """Copy-on-write apply: (new file list, stats).
+
+        Guard: an update only lands if its (wall, logical, seq) exceeds the
+        stored commit of the matching row — late/stale events are no-ops
+        (FIXTURES scenario 12).
+        """
+        pk = self.pk_col
+        user_cols = [f.name for f in self.schema.fields]
+
+        # ONE pass over the (parse→dedup) update chain: stage the physical
+        # row image as parquet. Downstream consumers (bucket probe, both
+        # join sides) read the staged columnar files — deliberately NOT
+        # .persist(): Spark's in-memory cache collapses on nested
+        # array/struct rows (70s+ builds vs a sub-second parquet
+        # round-trip) and the update count comes free from the footers.
         staging = os.path.join(self.path, "staging", batch_key.replace(":", "_"))
-        # repartition on _bucket so partitionBy emits ≤1 file per bucket
-        # (without it every task writes a sliver into every bucket dir)
-        par_u = min(nb, max(spark.sparkContext.defaultParallelism, 1) * 2)
-        u_rows_plan.repartition(par_u, "_bucket").write.mode("overwrite").partitionBy("_bucket").parquet(staging)
+        _write_buckets(spark, u_rows_plan, self.meta["num_buckets"], staging)
         n_updates, per_bucket, u_ranges = _staged_stats(staging, pk)
         touched = sorted(per_bucket)
         # file-level pruning inside touched buckets (Iceberg column-stats
@@ -395,9 +417,6 @@ class SnapshotTable:
                 target_files.append(fe)
 
         obs = Observation()
-        new_version = self.meta["version"] + 1
-        rel_dir = f"data/v{new_version}"
-        out_dir = os.path.join(self.path, rel_dir)
         new_files: list[dict[str, Any]] = []
         if touched:
             u_rows = spark.read.parquet(staging)  # partition discovery restores _bucket
@@ -414,7 +433,7 @@ class SnapshotTable:
                 u_rows = F.broadcast(u_rows)
 
             tgt = self._read_files(spark, target_files)
-            tgt_b = tgt.withColumn("_bucket", F.pmod(F.xxhash64(F.col(pk)), F.lit(nb)).cast("int"))
+            tgt_b = tgt.withColumn("_bucket", self.bucket_expr())
 
             newer = _commit_gt("u", "t")
             # matched path: keep target unless the update is strictly newer
@@ -449,117 +468,28 @@ class SnapshotTable:
                 F.sum(F.when(F.col("_applied") & ~F.col("_matched"), 1).otherwise(0)).alias("inserted"),
                 F.sum(F.when(~F.col("_applied") & F.col("_matched"), 1).otherwise(0)).alias("stale_or_kept"),
             ).drop("_applied", "_matched")
-            # partitionBy splits files per bucket regardless; the repartition
-            # count only sets write parallelism — cap it near the core count
-            # so tiny merges don't schedule one task per bucket
-            par = min(len(touched), max(spark.sparkContext.defaultParallelism, 1) * 2)
-            (
-                result.repartition(par, "_bucket")
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(out_dir)
-            )
-            sid = self.meta["current_schema_id"]
-            new_files = _collect_data_files(self.path, out_dir, rel_dir, sid, pk=pk)
+            new_files = self._write_data(spark, result, len(touched))
             stats = {k: int(v) for k, v in observed(obs).items()}
         else:
             stats = {"rows_written": 0, "deleted": 0, "updated": 0, "inserted": 0, "stale_or_kept": 0}
-        stats["pruned_files"] = pruned_files
-
-        meta = json.loads(json.dumps(self.meta))
-        meta["version"] = new_version
-        meta["files"] = carry_files + new_files
-        meta["applied"][batch_key] = new_version
-        if frontier_provider is not None and frontier_hlc is None:
-            frontier_hlc = frontier_provider()
-        if frontier_hlc:
-            from ..functions.hlc import parse_hlc
-
-            wall, logical = parse_hlc(frontier_hlc)
-            if (wall, logical) >= (meta["frontier"]["wall_ns"], meta["frontier"]["logical"]):
-                meta["frontier"] = {"wall_ns": wall, "logical": logical, "hlc": frontier_hlc}
-        stats.update({"n_updates": n_updates, "touched_buckets": len(touched), "frontier_hlc": frontier_hlc})
-        meta["summary"] = {"op": "merge", "batch_key": batch_key, **stats, "committed_at": time.time()}
-        self._write_version(meta)
         shutil.rmtree(staging, ignore_errors=True)
-        return {"skipped": False, "batch_key": batch_key, "version": new_version, **stats}
-
+        stats.update(pruned_files=pruned_files, n_updates=n_updates, touched_buckets=len(touched))
+        return carry_files + new_files, stats
 
     def _merge_mor(
-        self,
-        spark: SparkSession,
-        updates: DataFrame,
-        batch_key: str,
-        frontier_hlc: str | None = None,
-        frontier_provider=None,
-    ) -> dict[str, Any]:
-        """Append-only apply: normalized update rows land as delta files in
-        their buckets; no target scan, no join. Exactly-once and the
-        commit-ts guard hold because read-time resolution is the same
-        arg-max the CoW guard implements."""
-        if batch_key in self.meta["applied"]:
-            return {"skipped": True, "batch_key": batch_key, "version": self.meta["version"]}
-
-        pk = self.pk_col
-        user_cols = [f.name for f in self.schema.fields]
-        nb = self.meta["num_buckets"]
-
-        u_rows = updates.select(
-            *[F.col(c) for c in user_cols],
-            F.pmod(F.xxhash64(F.col(pk)), F.lit(nb)).cast("int").alias("_bucket"),
-            (F.col("op") == "d").alias("_deleted"),
-            F.col("commit_wall_ns").alias("_commit_wall_ns"),
-            F.col("commit_logical").alias("_commit_logical"),
-            F.col("seq").alias("_commit_seq"),
-        )
+        self, spark: SparkSession, u_rows: DataFrame
+    ) -> tuple[list[dict[str, Any]], dict[str, Any]]:
+        """Append-only apply: (new file list, stats). Normalized update rows
+        land as delta files in their buckets; no target scan, no join.
+        Exactly-once and the commit-ts guard hold because read-time
+        resolution is the same arg-max the CoW guard implements."""
         # ONE Spark pass total: the delta write IS the apply; update count
         # and touched buckets come from the written parquet footers
-        new_version = self.meta["version"] + 1
-        rel_dir = f"data/v{new_version}"
-        out_dir = os.path.join(self.path, rel_dir)
-        par_u = min(nb, max(spark.sparkContext.defaultParallelism, 1) * 2)
-        u_rows.repartition(par_u, "_bucket").write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-        scanned = _scan_bucket_dir(out_dir, pk)  # ONE footer pass, shared
-        n_updates, per_bucket, _ = _staged_stats(out_dir, pk, scanned=scanned)
-        touched = sorted(per_bucket)
-        sid = self.meta["current_schema_id"]
-        new_files = _collect_data_files(
-            self.path, out_dir, rel_dir, sid, pk=pk, kind="delta", scanned=scanned
-        )
-
-        meta = json.loads(json.dumps(self.meta))
-        meta["version"] = new_version
-        meta["files"] = meta["files"] + new_files
-        meta["applied"][batch_key] = new_version
-        if frontier_provider is not None and frontier_hlc is None:
-            frontier_hlc = frontier_provider()
-        if frontier_hlc:
-            from ..functions.hlc import parse_hlc
-
-            wall, logical = parse_hlc(frontier_hlc)
-            if (wall, logical) >= (meta["frontier"]["wall_ns"], meta["frontier"]["logical"]):
-                meta["frontier"] = {"wall_ns": wall, "logical": logical, "hlc": frontier_hlc}
-        stats = {"n_updates": n_updates, "touched_buckets": len(touched),
-                 "delta_files": len(new_files), "frontier_hlc": frontier_hlc}
-        meta["summary"] = {"op": "merge-mor", "batch_key": batch_key, **stats,
-                           "committed_at": time.time()}
-        self._write_version(meta)
-
-        # auto-compaction: a bucket compacts when its delta FILE count
-        # passes the soft trigger AND its delta ROWS reach
-        # compact_min_delta_ratio of its base rows (LSM-style size-ratio —
-        # see the property docstrings: the file trigger alone forces a
-        # full-table rewrite every max_deltas batches once steady
-        # micro-batches touch every bucket), or unconditionally at the
-        # hard file cap (read health). Manifests written before row counts
-        # existed fall back to the file trigger alone.
-        to_compact = self._compaction_victims(meta["files"])
-        if to_compact:
-            stats["compacted_buckets"] = len(to_compact)
-            t0 = time.time()
-            self.compact(spark, to_compact)
-            stats["compact_secs"] = round(time.time() - t0, 3)
-        return {"skipped": False, "batch_key": batch_key, "version": self.meta["version"], **stats}
+        new_files = self._write_data(spark, u_rows, self.meta["num_buckets"], kind="delta")
+        touched = {fe["bucket"] for fe in new_files if fe["rows"]}
+        stats = {"n_updates": sum(fe["rows"] for fe in new_files), "touched_buckets": len(touched),
+                 "delta_files": len(new_files)}
+        return self.meta["files"] + new_files, stats
 
     def _compaction_victims(self, files: list[dict[str, Any]]) -> list[int]:
         d_files: dict[int, int] = {}
@@ -602,7 +532,7 @@ class SnapshotTable:
         keep = [fe for fe in files if fe["bucket"] not in bucket_set]
         if not victims:
             return {"compacted": 0, "version": self.meta["version"]}
-        resolved = _argmax_rows(self._read_files(spark, victims), self.pk_col)
+        resolved = argmax_rows(self._read_files(spark, victims), self.pk_col, _COMMIT_ORDER)
         # tombstone GC: the resolved-timestamp frontier guarantees no event
         # below it can still arrive (W1), so a delete tombstone older than
         # the frontier has nothing left to guard against — purge it
@@ -611,23 +541,54 @@ class SnapshotTable:
             resolved = resolved.filter(
                 ~(F.col("_deleted") & (F.col("_commit_wall_ns") < frontier_wall))
             )
-        resolved = resolved.withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(F.col(self.pk_col)), F.lit(self.meta["num_buckets"])).cast("int"),
-        )
-        new_version = self.meta["version"] + 1
-        rel_dir = f"data/v{new_version}"
+        resolved = resolved.withColumn("_bucket", self.bucket_expr())
+        new_files = self._write_data(spark, resolved, len(bucket_set))
+        version = self._commit(keep + new_files, {"op": "compact", "buckets": buckets})
+        return {"compacted": len(buckets), "version": version}
+
+    # ---------------- write + commit ----------------
+
+    def bucket_expr(self) -> Column:
+        """The bucket of each row's pk — a storage-format invariant: every
+        file's bucket membership was frozen under this expression."""
+        return F.pmod(F.xxhash64(F.col(self.pk_col)), F.lit(self.meta["num_buckets"])).cast("int")
+
+    def _write_data(
+        self, spark: SparkSession, rows: DataFrame, n_buckets: int, kind: str | None = None
+    ) -> list[dict[str, Any]]:
+        """Write ``_bucket``-tagged rows into the next version's data dir;
+        return their manifest entries."""
+        rel_dir = f"data/v{self.meta['version'] + 1}"
         out_dir = os.path.join(self.path, rel_dir)
-        par = min(len(bucket_set), max(spark.sparkContext.defaultParallelism, 1) * 2)
-        resolved.repartition(par, "_bucket").write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-        sid = self.meta["current_schema_id"]
-        new_files = _collect_data_files(self.path, out_dir, rel_dir, sid, pk=self.pk_col)
+        _write_buckets(spark, rows, n_buckets, out_dir)
+        return _collect_data_files(
+            self.path, out_dir, rel_dir, self.meta["current_schema_id"], pk=self.pk_col, kind=kind
+        )
+
+    def _commit(
+        self,
+        files: list[dict[str, Any]],
+        summary: dict[str, Any],
+        batch_key: str | None = None,
+        frontier_hlc: str | None = None,
+    ) -> int:
+        """Commit the next version with ``files`` as its manifest; record
+        ``batch_key`` as applied and advance the frontier (never backwards)
+        when given. Returns the new version."""
         meta = json.loads(json.dumps(self.meta))
-        meta["version"] = new_version
-        meta["files"] = keep + new_files
-        meta["summary"] = {"op": "compact", "buckets": buckets, "committed_at": time.time()}
+        meta["version"] += 1
+        meta["files"] = files
+        if batch_key is not None:
+            meta["applied"][batch_key] = meta["version"]
+        if frontier_hlc:
+            from ..functions.hlc import parse_hlc
+
+            wall, logical = parse_hlc(frontier_hlc)
+            if (wall, logical) >= (meta["frontier"]["wall_ns"], meta["frontier"]["logical"]):
+                meta["frontier"] = {"wall_ns": wall, "logical": logical, "hlc": frontier_hlc}
+        meta["summary"] = {**summary, "committed_at": time.time()}
         self._write_version(meta)
-        return {"compacted": len(buckets), "version": new_version}
+        return meta["version"]
 
     def table_changes(
         self, spark: SparkSession, from_version: int, to_version: int | None = None
@@ -789,6 +750,16 @@ class SnapshotTable:
                 "staging_dirs": removed_staging}
 
 
+def _write_buckets(spark: SparkSession, rows: DataFrame, n_buckets: int, out_dir: str) -> None:
+    """Write ``_bucket``-tagged rows as a ``_bucket=``-partitioned parquet
+    dir. The repartition on ``_bucket`` makes partitionBy emit ≤1 file per
+    bucket (without it every task writes a sliver into every bucket dir);
+    its count only sets write parallelism — capped near the core count so
+    tiny writes don't schedule one task per bucket."""
+    par = min(n_buckets, max(spark.sparkContext.defaultParallelism, 1) * 2)
+    rows.repartition(par, "_bucket").write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+
+
 def _scan_footer(fp: str, pk: str | None) -> tuple[int, tuple | None]:
     """ONE footer read: (num_rows, pk (min,max) or None). Ranges are None
     when stats are absent or non-JSON-able (binary pk)."""
@@ -846,16 +817,14 @@ def _scan_bucket_dir(root: str, pk: str | None) -> list[dict[str, Any]]:
     ]
 
 
-def _staged_stats(
-    root: str, pk: str | None = None, scanned: list[dict[str, Any]] | None = None
-) -> tuple[int, dict[int, int], dict[int, tuple]]:
+def _staged_stats(root: str, pk: str | None = None) -> tuple[int, dict[int, int], dict[int, tuple]]:
     """(total rows, rows per bucket, pk-range per bucket) of a
     ``_bucket=``-partitioned parquet dir, from file footers — driver-side
     metadata only, no Spark job (exactly what Iceberg manifests store)."""
     per_bucket: dict[int, int] = {}
     ranges: dict[int, tuple] = {}
     complete: dict[int, bool] = {}
-    for e in _scan_bucket_dir(root, pk) if scanned is None else scanned:
+    for e in _scan_bucket_dir(root, pk):
         b = e["bucket"]
         per_bucket[b] = per_bucket.get(b, 0) + e["rows"]
         if pk is not None:
@@ -879,13 +848,12 @@ def _staged_stats(
 def _collect_data_files(
     table_path: str, out_dir: str, rel_dir: str, sid: int,
     pk: str | None = None, kind: str | None = None,
-    scanned: list[dict[str, Any]] | None = None,
 ) -> list[dict[str, Any]]:
     """Manifest entries for a freshly-written ``_bucket=``-partitioned dir,
     with per-file pk min/max from the footers (the Iceberg column-stats
     analogue; drives file-level pruning in the CoW merge)."""
     files: list[dict[str, Any]] = []
-    for e in _scan_bucket_dir(out_dir, pk) if scanned is None else scanned:
+    for e in _scan_bucket_dir(out_dir, pk):
         fe: dict[str, Any] = {
             "path": f"{rel_dir}/{os.path.relpath(e['path'], out_dir)}",
             "bucket": e["bucket"], "schema_id": sid,
@@ -902,52 +870,10 @@ def _collect_data_files(
     return files
 
 
-def _argmax_rows(df: DataFrame, pk_col: str) -> DataFrame:
-    """One surviving physical row per key by max (wall, logical, seq) —
-    the read-time twin of the CoW merge guard.
-
-    Two-phase arg-max (same shape as operators/dedup.last_writer_wins,
-    where it measured 64s → ~4s on a 2M-row batch): phase 1 aggregates
-    ONLY the 3-long ordering tuple per key — map-side combinable, and the
-    aggregation never touches the nested token payload (a payload-wide
-    ``max(struct(...))`` forces ObjectHashAggregate into its sort-based
-    fallback past 128 groups, and sorting nested arrays is brutal). Phase
-    2 joins the winners back; the winner side is (pk + 3 longs) so the
-    shuffle-hash build is tiny, and the payload side is hashed, never
-    sorted. Catalyst folds the ordering-equality filter into the join
-    keys, so the payload shuffle hashes on (wall, logical, seq, pk) —
-    which also spreads a hot key's delta rows across partitions
-    (skew-immune, unlike a pk-partitioned window).
-
-    One row per key then holds WITHOUT a trailing dedup because no two
-    stored rows can share the full (pk, wall, logical, seq) tuple: seq is
-    the globally-unique log offset (redeliveries arrive under fresh
-    offsets, the Kafka composite folds the partition into the low bits),
-    a micro-batch's offset range never overlaps another's, and replayed
-    batches are dropped by the batch_key guard before anything is
-    written. A dropDuplicates here would re-introduce exactly the
-    payload-wide aggregate this function exists to avoid (Catalyst plans
-    it as a first(<payload>) SortAggregate over nested arrays)."""
-    ordering = ["_commit_wall_ns", "_commit_logical", "_commit_seq"]
-    win = df.groupBy(pk_col).agg(
-        F.max(F.struct(*[F.col(c) for c in ordering])).alias("_win")
-    )
-    cond = F.lit(True)
-    for c in ordering:
-        cond = cond & (F.col(c) == F.col(f"_win.{c}"))
-    return (
-        df.join(win.hint("shuffle_hash"), pk_col)
-        .filter(cond)
-        .select(*df.columns)
-    )
-
-
 def _commit_gt(a: str, b: str):
     """(wall, logical, seq) lexicographic strictly-greater between aliases."""
-    return F.struct(
-        F.col(f"{a}._commit_wall_ns"), F.col(f"{a}._commit_logical"), F.col(f"{a}._commit_seq")
-    ) > F.struct(
-        F.col(f"{b}._commit_wall_ns"), F.col(f"{b}._commit_logical"), F.col(f"{b}._commit_seq")
+    return F.struct(*[F.col(f"{a}.{c}") for c in _COMMIT_ORDER]) > F.struct(
+        *[F.col(f"{b}.{c}") for c in _COMMIT_ORDER]
     )
 
 

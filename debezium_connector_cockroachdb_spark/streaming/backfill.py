@@ -56,7 +56,6 @@ def run_incremental_snapshot(
 
     table = pipeline.table
     nb = table.meta["num_buckets"]
-    pk = table.pk_col
     wall = snapshot_wall_ns if snapshot_wall_ns is not None else pipeline.cfg.snapshot_wall_ns
     stats = []
     for chunk in range(n_chunks):
@@ -69,7 +68,7 @@ def run_incremental_snapshot(
 
         lo = chunk * nb // n_chunks
         hi = (chunk + 1) * nb // n_chunks
-        bucket = F.pmod(F.xxhash64(F.col(pk)), F.lit(nb))
+        bucket = table.bucket_expr()
         part = source_df.filter((bucket >= lo) & (bucket < hi))
         updates = part.select(
             *[F.col(f.name) for f in table.schema.fields if f.name in part.columns],

@@ -9,7 +9,7 @@ phase whose every micro-batch runs:
     parse (one from_json pass)                         [P1 P2 C1-C15 D2]
     → drift check + schema evolution                    [E1 E2 E3]
     → control/data split, frontier advance              [F1 F2 W1 W3]
-    → identity dedup + per-key last-writer-wins         [D1]
+    → per-key last-writer-wins arg-max                  [D1]
     → bucket-pruned MERGE with commit-ts guard          [§2.5, W5]
     → lineage/metrics row                               [§2.6]
 
@@ -99,12 +99,6 @@ class IngestConfig:
     # ratio 0 reproduces the pure file-count trigger)
     mor_compact_min_delta_ratio: float = 0.2
     mor_hard_max_deltas_per_bucket: int | None = None
-    # MoR only: skip the per-batch last-writer-wins entirely — read-time
-    # arg-max resolves intra-batch duplicates/ordering identically, so the
-    # write path becomes a pure parse→delta-write with NO join and NO
-    # shuffle-side broadcast (the last serial cost). Costs more delta rows
-    # until compaction; ignored under CoW (its join needs one row per key).
-    mor_skip_batch_dedup: bool = False
     # "poll": check the schema registry's version once per micro-batch
     #   (O(1) driver-side; evolving one batch early is safe — add-column and
     #   widen are backward compatible, pre-DDL rows null-fill either way).
@@ -444,10 +438,7 @@ class CDCPipeline:
         data = parsed.filter(~F.col("is_control") & F.col("pk").isNotNull()).select(
             "pk", "commit_wall_ns", "commit_logical", "seq", "op", "after"
         )
-        if self.cfg.merge_mode == "mor" and self.cfg.mor_skip_batch_dedup:
-            updates = self._to_updates(data)
-        else:
-            updates = self._to_updates(dedupe_batch(data, "pk"))
+        updates = self._to_updates(dedupe_batch(data, "pk"))
 
         def batch_agg() -> dict[str, Any]:
             # a degenerate plan can finish without running the observe node

@@ -1,13 +1,9 @@
-"""Event dedup + last-writer-wins (D1) — reference semantics from
+"""Per-key last-writer-wins (D1) — reference semantics from
 CockroachDBStreamingChangeEventSourceTest.java:57-144 and FIXTURES §4."""
 
 from pyspark.sql import Row
 
-from debezium_connector_cockroachdb_spark.operators.dedup import (
-    dedupe_batch,
-    drop_duplicate_events,
-    last_writer_wins,
-)
+from debezium_connector_cockroachdb_spark.operators.dedup import dedupe_batch
 
 COLS = ("table_name", "op", "commit_wall_ns", "commit_logical", "seq", "pk", "val")
 
@@ -25,37 +21,27 @@ def test_duplicate_delivery_dropped(spark):
         ("t", "c", 100, 0, 1, "a", "v1"),
         ("t", "c", 100, 0, 2, "a", "v1"),  # exact redelivery, later offset
     ])
-    assert drop_duplicate_events(df).count() == 1
+    assert dedupe_batch(df).count() == 1
 
 
 def test_same_ts_different_keys_both_kept(spark):
-    """Two rows of one txn share ts_ns — identity must include the key."""
+    """Two rows of one txn share ts_ns — the key separates them."""
     df = mk(spark, [
         ("t", "c", 100, 0, 1, "a", "v1"),
         ("t", "c", 100, 0, 2, "b", "v2"),
     ])
-    assert drop_duplicate_events(df).count() == 2
+    assert dedupe_batch(df).count() == 2
 
 
 def test_same_key_same_ts_delete_insert_distinct(spark):
-    """op is part of the identity (:866-881): same-ts delete+insert of one
-    key are two events; arrival order (seq) breaks the tie."""
+    """Same-ts delete+insert of one key are two events (:866-881); arrival
+    order (seq) breaks the tie."""
     df = mk(spark, [
         ("t", "d", 100, 0, 1, "a", None),
         ("t", "c", 100, 0, 2, "a", "v2"),
     ])
-    dd = drop_duplicate_events(df)
-    assert dd.count() == 2
-    [w] = last_writer_wins(dd).collect()
+    [w] = dedupe_batch(df).collect()
     assert w["op"] == "c" and w["seq"] == 2  # later arrival wins
-
-
-def test_same_tables_across_schemas_distinct(spark):
-    df = mk(spark, [
-        ("s1.t", "c", 100, 0, 1, "a", "v1"),
-        ("s2.t", "c", 100, 0, 2, "a", "v1"),
-    ])
-    assert drop_duplicate_events(df).count() == 2
 
 
 def test_last_writer_wins_out_of_order(spark):
@@ -67,7 +53,7 @@ def test_last_writer_wins_out_of_order(spark):
         ("t", "u", 100, 0, 3, "a", "oldest"),
         ("t", "u", 300, 1, 4, "a", "logical-wins"),  # same wall, higher logical
     ])
-    [w] = last_writer_wins(df).collect()
+    [w] = dedupe_batch(df).collect()
     assert w["val"] == "logical-wins"
 
 

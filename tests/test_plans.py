@@ -4,7 +4,7 @@ aggregation instead of window sorts)."""
 
 from pyspark.sql import functions as F
 
-from debezium_connector_cockroachdb_spark.operators.dedup import last_writer_wins
+from debezium_connector_cockroachdb_spark.operators.dedup import dedupe_batch
 from debezium_connector_cockroachdb_spark.sources.envelope import parse_changefeed
 from debezium_connector_cockroachdb_spark.sources.generator import (
     TOKENIZED_SEQUENCES_SPECS,
@@ -44,7 +44,7 @@ def test_last_writer_wins_is_partial_agg_not_window(spark):
     map-side partial phase (hot-key safe), never as a Window sort."""
     cfg = GeneratorConfig(num_keys=20, num_events=100, n_files=1)
     parsed = parse_changefeed(event_log(spark, cfg), TOKENIZED_SEQUENCES_SPECS, "doc_id")
-    lww = last_writer_wins(parsed.filter(~F.col("is_control")), "pk")
+    lww = dedupe_batch(parsed.filter(~F.col("is_control")), "pk")
     plan = plan_of(lww)
     assert "Window" not in plan
     assert plan.count("HashAggregate") >= 2 or "ObjectHashAggregate" in plan or "SortAggregate" in plan
