@@ -930,45 +930,33 @@ def _corpus_curation_sql() -> str:
     return SQL_CORPUS_CURATION_TMPL.replace("{{TEXT_ANALYSIS}}", SQL_TEXT_ANALYSIS)
 
 
-def q_stream_dedup(spark: SparkSession, sf_dir: str, engine: str = "pandas") -> DataFrame:
-    """Cross-batch STREAMING dedup (applyInPandasWithState, checkpointed
-    GroupState): documents split into 3 deterministic micro-batches
-    (doc_id % 3, mtime-ordered); the first batch containing a content
-    fingerprint emits its min-doc_id copy, all later copies are suppressed
-    by state. First-batch-wins semantics is plain SQL, so even this
-    stateful streaming operator faces a value-exact oracle.
-
-    ``engine="jvm"`` runs the same workload through the native
-    dropDuplicates state store (bench A/B only — its intra-batch winner is
-    first-received, not min-id, so it can't face the min-id oracle)."""
+def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-batch STREAMING dedup (``streaming_exact_dedup``: per-batch
+    min-id arg-max + anti-join against earlier batches' output, all in the
+    JVM): documents split into 3 deterministic micro-batches (doc_id % 2,
+    then a formatting-noise copy of every document; mtime-ordered); the
+    first batch containing a content fingerprint emits its min-doc_id copy,
+    all later copies are suppressed. First-batch-wins semantics is plain
+    SQL, so even this stateful streaming operator faces a value-exact
+    oracle."""
     from ..streaming.stream_dedup import streaming_exact_dedup
 
     # the 3 source batches are a pure re-layout of documents.parquet —
-    # staged once like the shingle table; only the stream OUTPUT /
-    # checkpoint / state store are per-call state, in a fresh dir per call
-    # (removed at exit) so an earlier call's still-lazy result keeps its files
+    # staged once like the shingle table; only the stream OUTPUT and
+    # checkpoint are per-call state, in a fresh dir per call (removed at
+    # exit) so an earlier call's still-lazy result keeps its files
     src = _staged_stream_dedup_src(spark, sf_dir)
     root = _stage_root(_input_marker(sf_dir, ["documents"]))
-    run_base = os.path.join(root, "stream_dedup", f"run_{engine}_{uuid.uuid4().hex[:12]}")
+    run_base = os.path.join(root, "stream_dedup", f"run_{uuid.uuid4().hex[:12]}")
     atexit.register(shutil.rmtree, run_base, ignore_errors=True)
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(src, "*"))
     )
-    q = (
-        streaming_exact_dedup(stream, engine=engine)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(run_base, "out"))
-        .option("checkpointLocation", os.path.join(run_base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(os.path.join(run_base, "out")).select(
-        "fp", "doc_id", "n_dropped_before_emit"
-    )
+    out = os.path.join(run_base, "out")
+    streaming_exact_dedup(stream, out, os.path.join(run_base, "ckpt")).awaitTermination()
+    return spark.read.parquet(out).select("fp", "doc_id", "n_dropped_before_emit")
 
 
 def _staged_stream_dedup_src(spark: SparkSession, sf_dir: str) -> str:

@@ -17,6 +17,17 @@ from pyspark import SparkContext
 from pyspark.sql import Observation, SparkSession
 
 
+def driver_memory_mb(total_kb: int | None = None) -> int:
+    """Default driver heap: a quarter of the host's memory (``total_kb``,
+    else MemTotal from /proc/meminfo), clamped to [1 GiB, 8 GiB] — hosts
+    are often shared, and local-mode working sets sit far below either
+    bound."""
+    if total_kb is None:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return max(1024, min(8192, total_kb // 4096))
+
+
 def build_session(
     app_name: str = "cdc-ingest",
     master: str | None = None,
@@ -52,7 +63,10 @@ def build_session(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.io.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", f"{driver_memory_mb()}m"),
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

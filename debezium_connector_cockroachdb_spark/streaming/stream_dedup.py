@@ -1,156 +1,76 @@
-"""Cross-batch streaming deduplication of a document stream — the custom
-STATEFUL operator surface (applyInPandasWithState, Arrow-batched).
+"""Cross-batch streaming deduplication of a document stream.
 
 Batch-mode dedup (operators/text_dedup.py) collapses duplicates within one
 dataset; a streaming ingest needs to suppress duplicates across
-micro-batches: the first document carrying a given content fingerprint is
-emitted, every later copy (same batch or any later batch) is dropped. The
-reference's analogue is the bounded LRU event-identity cache
-(CockroachDBStreamingChangeEventSource.java:85-104); here the key is the
-CONTENT fingerprint (whitespace/case-normalized md5, operators/text.py),
-the state store is Spark's checkpointed per-key GroupState, and the scale
-story is Spark's, not a driver-side cache: state is hash-partitioned by
-fingerprint across executors, so 10^10 seen-fingerprints shard instead of
-bounding (with an optional processing-time timeout to cap state size the
-way the reference's LRU caps memory).
+micro-batches: the first micro-batch carrying a given content fingerprint
+emits its min-``doc_id`` copy, every later copy (same batch or any later
+batch) is dropped. The reference's analogue is the bounded LRU
+event-identity cache (CockroachDBStreamingChangeEventSource.java:85-104);
+here the key is the CONTENT fingerprint (whitespace/case-normalized md5,
+operators/text.py) and the seen set is not a cache but a dataset built one
+micro-batch at a time (D-Streams): the sink itself.
 
-No per-row Python: the kernel receives Arrow batches per fingerprint
-group; the emitted row is a vectorized pandas slice.
+Each micro-batch runs entirely in the JVM inside ``foreachBatch``:
+``groupBy(fp)`` picks the min-``doc_id`` winner and counts the copies, a
+left-anti join drops the fingerprints earlier batches emitted, and the
+novel rows are written with ``mode("overwrite")`` to the batch's own
+``_batch=<batch_id>`` directory of the sink. The anti join reads only
+``_batch < batch_id``, so a batch Spark replays after a crash rewrites
+exactly the rows it wrote before: replays are idempotent and no second
+state store is needed. Seen fingerprints shard with the sink's files
+instead of being bounded by driver memory.
 """
 
 from __future__ import annotations
 
-from typing import Any
+import os
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.text import fingerprint
-
-STATE_SCHEMA = "n_seen long"
-
-
-def output_schema(id_type: T.DataType = T.StringType()) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("fp", T.StringType(), False),
-            T.StructField("doc_id", id_type, True),
-            T.StructField("text", T.StringType(), True),
-            T.StructField("n_dropped_before_emit", T.LongType(), False),
-        ]
-    )
 
 
 def streaming_exact_dedup(
     stream: DataFrame,
+    path: str,
+    checkpoint: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    state_timeout_ms: int | None = None,
-    engine: str = "pandas",
-) -> DataFrame:
-    """First-occurrence filter over a streaming documents DataFrame.
+) -> StreamingQuery:
+    """Start an availableNow first-occurrence filter over a streaming
+    documents DataFrame.
 
-    Emits one row per novel content fingerprint (the min-``id_col`` copy of
-    its first micro-batch, deterministic under intra-batch duplication);
-    all later copies update the per-key duplicate counter in state and emit
-    nothing. ``state_timeout_ms`` optionally expires idle fingerprints
-    (processing-time timeout) so unbounded streams can trade re-admission
-    of very old duplicates for bounded state — exactly the reference LRU's
-    trade-off, made explicit.
+    Writes one row per novel content fingerprint to ``path`` (parquet,
+    partitioned by ``_batch``): ``fp, doc_id, text, n_dropped_before_emit``
+    where ``doc_id`` is the smallest non-null ``id_col`` among the
+    fingerprint's copies in the first micro-batch that carries it, ``text``
+    is that copy's text and ``n_dropped_before_emit`` counts the other
+    copies of that batch. Copies in later batches emit nothing, and
+    documents without text have no fingerprint and emit nothing.
+    Returns the started query."""
 
-    ``engine`` picks the state backend:
-
-    - ``"pandas"`` (default): ``applyInPandasWithState`` — deterministic
-      min-``id_col`` winner within the first batch plus an exact
-      ``n_dropped_before_emit`` counter. Costs a Python worker round-trip
-      per fingerprint GROUP per batch, which at 10^10 mostly-unique docs
-      is billions of 1-row pandas invocations.
-    - ``"jvm"``: Spark's native streaming ``dropDuplicates([fp])`` — the
-      whole filter runs in the JVM state store (RocksDB/HDFS-backed),
-      zero Python in the loop. Same emitted-fingerprint SET and same
-      cross-batch/restart semantics; the surviving row among INTRA-batch
-      duplicates is first-received (partition-order-dependent, not
-      min-id), and drop counts aren't tracked
-      (``n_dropped_before_emit`` is null). Use it whenever plain
-      first-wins suffices — that's the reference's own LRU semantics
-      (CockroachDBStreamingChangeEventSource.java:85-104, which also
-      keeps no per-key duplicate counter)."""
-    if engine == "jvm":
-        keyed = stream.select(
+    def emit(batch: DataFrame, batch_id: int) -> None:
+        rows = batch.where(F.col(text_col).isNotNull()).select(
             fingerprint(F.col(text_col)).alias("fp"),
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("text"),
         )
-        if state_timeout_ms is not None:
-            # JVM analogue of the processing-time state timeout: stamp
-            # arrival time, watermark it, and let the state store evict
-            # fingerprints older than the horizon — interval in
-            # milliseconds so the requested horizon is honored exactly
-            # (second-flooring would silently double a 500 ms timeout)
-            keyed = keyed.withColumn("_ingest_ts", F.current_timestamp()).withWatermark(
-                "_ingest_ts", f"{max(int(state_timeout_ms), 1)} milliseconds"
-            )
-            deduped = keyed.dropDuplicatesWithinWatermark(["fp"]).drop("_ingest_ts")
-        else:
-            deduped = keyed.dropDuplicates(["fp"])
-        return deduped.select(
-            "fp", "doc_id", "text",
-            F.lit(None).cast("long").alias("n_dropped_before_emit"),
+        # min / min_by skip null ids: a null id never beats a non-null copy
+        novel = rows.groupBy("fp").agg(
+            F.min("doc_id").alias("doc_id"),
+            F.min_by("text", "doc_id").alias("text"),
+            (F.count(F.lit(1)) - 1).alias("n_dropped_before_emit"),
         )
-    if engine != "pandas":
-        raise ValueError(f"unknown engine {engine!r} (expected 'pandas' or 'jvm')")
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+        if batch_id > 0:
+            seen = batch.sparkSession.read.parquet(path).where(F.col("_batch") < batch_id)
+            novel = novel.join(seen.select("fp"), "fp", "left_anti")
+        novel.write.mode("overwrite").parquet(os.path.join(path, f"_batch={batch_id}"))
 
-    id_type = stream.schema[id_col].dataType
-    out_t = output_schema(id_type)
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def kernel(key: Any, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (fp,) = key
-        seen = state.exists
-        n_prior = state.get[0] if seen else 0
-        # a large group arrives as MULTIPLE Arrow chunks (bounded by
-        # spark.sql.execution.arrow.maxRecordsPerBatch) — the min-id winner
-        # must be tracked ACROSS chunks, not taken from the first one
-        first: pd.DataFrame | None = None
-        n_new = 0
-        for pdf in pdfs:
-            n_new += len(pdf)
-            if not seen and len(pdf):
-                cand = pdf.sort_values(id_col).head(1)
-                if first is None or cand[id_col].iloc[0] < first[id_col].iloc[0]:
-                    first = cand
-        state.update((n_prior + n_new,))
-        if state_timeout_ms is not None:
-            state.setTimeoutDuration(state_timeout_ms)
-        if first is not None:
-            yield pd.DataFrame(
-                {
-                    "fp": [fp],
-                    "doc_id": first[id_col].values,
-                    "text": first[text_col].values,
-                    "n_dropped_before_emit": [n_new - 1],
-                }
-            )
-
-    keyed = stream.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
-        fingerprint(F.col(text_col)).alias("fp"),
-    ).groupBy("fp")
-    return keyed.applyInPandasWithState(
-        kernel,
-        outputStructType=out_t,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return (
+        stream.writeStream.foreachBatch(emit)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )

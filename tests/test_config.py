@@ -491,3 +491,13 @@ def test_mid_partition_resume_stored_plus_one(spark, tmp_path):
         for r in pp.read_state().select(*cols).collect()
     )
     assert norm(pipe) and norm(pipe) == norm(ref)
+
+
+def test_driver_memory_default_clamps_to_1_and_8_gib():
+    from debezium_connector_cockroachdb_spark.session import driver_memory_mb
+
+    gib_kb = 1024 * 1024
+    assert driver_memory_mb(2 * gib_kb) == 1024  # a quarter is 512 MiB: floor
+    assert driver_memory_mb(16 * gib_kb) == 4096  # a quarter
+    assert driver_memory_mb(256 * gib_kb) == 8192  # a quarter is 64 GiB: ceiling
+    assert 1024 <= driver_memory_mb() <= 8192  # MemTotal from /proc/meminfo

@@ -1,11 +1,9 @@
-"""Cross-batch streaming dedup (applyInPandasWithState): the first copy of
-a content fingerprint is emitted once; later copies — in the SAME batch or
-any LATER batch — are suppressed by checkpointed per-key state."""
+"""Cross-batch streaming dedup: the first copy of a content fingerprint is
+emitted once; later copies — in the SAME batch or any LATER batch — are
+suppressed by an anti join against the output of earlier batches."""
 
 import os
 import time
-
-from pyspark.sql import functions as F
 
 from debezium_connector_cockroachdb_spark.streaming.stream_dedup import (
     streaming_exact_dedup,
@@ -16,6 +14,17 @@ def _write_batch(spark, path, rows, n):
     spark.createDataFrame(rows, "doc_id string, text string").coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, f"b{n}"))
+
+
+def _drain(spark, src, tmp_path):
+    stream = (
+        spark.readStream.schema("doc_id string, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(src, "*"))
+    )
+    out_dir = str(tmp_path / "out")
+    streaming_exact_dedup(stream, out_dir, str(tmp_path / "ckpt")).awaitTermination()
+    return spark.read.parquet(out_dir).collect()
 
 
 def test_streaming_dedup_suppresses_cross_batch_copies(spark, tmp_path):
@@ -34,22 +43,7 @@ def test_streaming_dedup_suppresses_cross_batch_copies(spark, tmp_path):
         ("d6", "brand  new   doc"),
     ], 1)
 
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "*"))
-    )
-    out = streaming_exact_dedup(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {r["fp"]: r for r in spark.sql("SELECT * FROM dedup_out").collect()}
+    rows = {r["fp"]: r for r in _drain(spark, src, tmp_path)}
 
     got = {(r["doc_id"], r["n_dropped_before_emit"]) for r in rows.values()}
     # d1 wins its group (min id within the first batch, 1 sibling dropped);
@@ -58,129 +52,93 @@ def test_streaming_dedup_suppresses_cross_batch_copies(spark, tmp_path):
 
 
 def test_streaming_dedup_state_survives_restart(spark, tmp_path):
-    """The seen-fingerprint state is checkpointed: a NEW query instance on
-    the same checkpoint still suppresses previously-seen content."""
+    """The seen-fingerprint set is the sink: a NEW query instance on the
+    same checkpoint and sink still suppresses previously-seen content."""
     src = str(tmp_path / "src")
     os.makedirs(src, exist_ok=True)
     _write_batch(spark, src, [("a1", "alpha doc")], 0)
 
-    out_dir = str(tmp_path / "out")
-
-    def drain():
-        stream = (
-            spark.readStream.schema("doc_id string, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-        )
-        q = (
-            streaming_exact_dedup(stream)
-            .writeStream.format("parquet")  # memory sink can't recover checkpoints
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
-
-    assert drain() == {"a1"}
+    assert {r["doc_id"] for r in _drain(spark, src, tmp_path)} == {"a1"}
 
     time.sleep(0.1)
     _write_batch(spark, src, [("a2", "ALPHA   DOC"), ("a3", "fresh one")], 1)
-    # a2 duplicates pre-restart content -> suppressed by restored state
-    assert drain() == {"a1", "a3"}
+    # a2 duplicates pre-restart content -> suppressed by the earlier batch's output
+    assert {r["doc_id"] for r in _drain(spark, src, tmp_path)} == {"a1", "a3"}
 
 
 def test_streaming_dedup_min_id_across_arrow_chunks(spark, tmp_path):
-    """A large group reaches the kernel as several Arrow chunks; the
-    emitted winner must be the min-id copy of the WHOLE first batch, not
-    of whichever chunk happens to arrive first."""
+    """The emitted winner is the min-id copy of the WHOLE first batch,
+    whatever the order its copies arrive in."""
     src = str(tmp_path / "src")
     os.makedirs(src, exist_ok=True)
-    # 9 copies, descending ids, global min ("a00") last in data order —
-    # with 2-row Arrow chunks it cannot be in the first chunk
+    # 9 copies, descending ids, global min ("a00") last in data order
     rows = [(f"z{i:02d}", "same   content") for i in range(9, 1, -1)]
     rows.append(("a00", "same content"))
     _write_batch(spark, src, rows, 0)
 
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-    try:
-        stream = (
-            spark.readStream.schema("doc_id string, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "*"))
-        )
-        out_dir = str(tmp_path / "out")
-        q = (
-            streaming_exact_dedup(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-
-    got = spark.read.parquet(out_dir).collect()
+    got = _drain(spark, src, tmp_path)
     assert len(got) == 1
     assert got[0]["doc_id"] == "a00"
     assert got[0]["n_dropped_before_emit"] == 8
 
 
-def test_streaming_dedup_jvm_engine_state_equivalent(spark, tmp_path):
-    """engine="jvm" (native dropDuplicates, zero Python in the loop) must
-    be state-equivalent to the pandas engine: same emitted-fingerprint set,
-    same cross-batch suppression, state survives a query restart on the
-    same checkpoint. (Winner among intra-batch duplicates is first-received
-    rather than min-id — not asserted; drop counts are null.)"""
+def test_null_doc_id_never_beats_non_null_copy(spark, tmp_path):
+    """A copy without an id is counted as dropped but never emitted over a
+    copy that has one (the oracle's min(doc_id) ignores nulls)."""
     src = str(tmp_path / "src")
     os.makedirs(src, exist_ok=True)
-    _write_batch(spark, src, [("a1", "alpha doc"), ("b1", "beta doc")], 0)
+    _write_batch(spark, src, [(None, "Same Doc"), ("b", "same doc"), ("a", "same  doc")], 0)
 
-    out_dir = str(tmp_path / "out")
+    got = _drain(spark, src, tmp_path)
+    assert [(r["doc_id"], r["text"], r["n_dropped_before_emit"]) for r in got] == [
+        ("a", "same  doc", 2)
+    ]
+
+
+def test_streaming_dedup_replayed_batches_stay_exact(spark, tmp_path):
+    """Kill after batch 1 and resume: the restarted query replays batch 1
+    against a sink that already holds its output, then runs batch 2 again;
+    the sink must still equal the first-batch-wins oracle (which has no
+    row for documents without text) with one row per fingerprint."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from debezium_connector_cockroachdb_spark.plans import driver_queries as dq
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    texts = ["alpha beta", "Alpha  Beta ", "gamma", "delta", None, "gamma", "eps"] * 3
+    pq.write_table(pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()), "text": texts}),
+                   os.path.join(sf, "documents.parquet"))
+    # q_stream_dedup's 3 source batches: even ids, odd ids, a noisy copy of all
+    src = dq._staged_stream_dedup_src(spark, sf)
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    cols = ["fp", "doc_id", "n_dropped_before_emit"]
 
     def drain():
         stream = (
-            spark.readStream.schema("doc_id string, text string")
+            spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(os.path.join(src, "*"))
         )
-        q = (
-            streaming_exact_dedup(stream, engine="jvm")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out_dir).collect()
+        streaming_exact_dedup(stream, out_dir, ckpt).awaitTermination()
+        return sorted(tuple(r) for r in spark.read.parquet(out_dir).select(*cols).collect())
 
     first = drain()
-    assert {r["doc_id"] for r in first} == {"a1", "b1"}
-    assert all(r["n_dropped_before_emit"] is None for r in first)
+    # a crash after batch 1 wrote its output: batch 1 is planned but not
+    # committed, batch 2 never planned (its stale output stays in the sink)
+    for log, b in (("commits", 1), ("commits", 2), ("offsets", 2)):
+        for fn in (str(b), f".{b}.crc"):  # the log entry and its checksum
+            os.remove(os.path.join(ckpt, log, fn))
+    replayed = drain()
 
-    time.sleep(0.1)
-    # a2 duplicates pre-restart content -> suppressed by restored JVM state;
-    # c1 is novel -> emitted (identical scenario to the pandas restart test)
-    _write_batch(spark, src, [("a2", "ALPHA   DOC"), ("c1", "fresh one")], 1)
-    assert {r["doc_id"] for r in drain()} == {"a1", "b1", "c1"}
-
-
-def test_streaming_dedup_rejects_unknown_engine(spark):
-    import pytest as _pytest
-
-    df = spark.readStream.format("rate").load().selectExpr(
-        "cast(value as string) as doc_id", "'x' as text"
-    )
-    with _pytest.raises(ValueError, match="unknown engine"):
-        streaming_exact_dedup(df, engine="nope")
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')")
+    want = sorted(con.sql(f"SELECT {', '.join(cols)} FROM ({dq.SQL_STREAM_DEDUP})").fetchall())
+    assert first == want
+    assert replayed == want
+    assert len({r[0] for r in replayed}) == len(replayed)
 
 
 def test_q_stream_dedup_back_to_back_results_stay_readable(spark, tmp_path):
