@@ -10,9 +10,7 @@ conversions of §1.2.
 Spark-first design: ONE ``from_json`` over the whole envelope (JVM,
 whole-stage codegen, digit-exact decimals via declared DecimalType), then
 pure Column expressions for payload unwrap / op fallback / HLC split /
-byte + temporal conversion. No Python in the per-row path. An equivalent
-Arrow ``mapInPandas`` parser is provided for parity testing and for exotic
-payloads the JSON reader can't express.
+byte + temporal conversion. No Python in the per-row path.
 """
 
 from __future__ import annotations
@@ -180,8 +178,8 @@ def parse_changefeed(
     # raw after-image key set for exact drift detection (E1); deletes (no
     # after) contribute null and thus never trigger a refresh (:826-835).
     # EXPENSIVE: get_json_object re-parses the document (measured ~10x the
-    # cost of the typed from_json at 32 cores), so callers on the hot path
-    # disable it and poll the schema registry instead (drift_mode="poll")
+    # cost of the typed from_json at 32 cores), so the apply parse disables
+    # it; the drift probe (pipeline.after_key_sets) selects it alone
     if with_drift_keys:
         after_keys = F.json_object_keys(
             F.coalesce(
@@ -209,24 +207,3 @@ def parse_changefeed(
         after_c.alias("after"),
     )
 
-
-def raw_json_field_names(df: DataFrame, field: str = "after") -> list[str]:
-    """Distinct set of JSON keys appearing in ``<field>`` across a batch —
-    the drift-detection probe (E1, hasSchemaChanged :1302-1326). The
-    reference checks per event; checking once per micro-batch over just the
-    ``value`` column (pruned scan) is the structural win noted in §4."""
-    keys = (
-        df.select(
-            F.explode(
-                F.json_object_keys(
-                    F.coalesce(
-                        F.get_json_object("value", f"$.payload.{field}"),
-                        F.get_json_object("value", f"$.{field}"),
-                    )
-                )
-            ).alias("k")
-        )
-        .distinct()
-        .collect()
-    )
-    return sorted(r["k"] for r in keys)

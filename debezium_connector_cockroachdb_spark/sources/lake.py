@@ -38,6 +38,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -305,8 +306,7 @@ class SnapshotTable:
         spark: SparkSession,
         updates: DataFrame,
         batch_key: str,
-        frontier_hlc: str | None = None,
-        frontier_provider=None,
+        frontier: Callable[[], str | None] | None = None,
     ) -> dict[str, Any]:
         """Apply a deduped update set (ONE row per pk — caller runs
         ``dedupe_batch`` first; Iceberg MERGE has the same one-match-row
@@ -314,11 +314,11 @@ class SnapshotTable:
         ``commit_wall_ns`` + ``commit_logical`` + ``seq``. Replayed
         batch_keys are skipped entirely.
 
-        ``frontier_provider`` (optional ``() -> str|None``) is consulted
-        right before the metadata commit — it lets callers derive the
-        resolved frontier from an ``observe()`` on the update plan itself
-        (available only after the write ran) instead of paying a separate
-        aggregation pass.
+        ``frontier`` (optional ``() -> str|None``) yields the resolved HLC
+        frontier to advance to; it is called right before the metadata
+        commit, so callers can derive it from an ``observe()`` on the
+        update plan itself (available only after the write ran) instead of
+        paying a separate aggregation pass.
 
         The table's write mode supplies the new file list and stats:
 
@@ -347,12 +347,10 @@ class SnapshotTable:
             files, stats = self._merge_mor(spark, rows)
         else:
             files, stats = self._merge_cow(spark, rows, batch_key)
-        if frontier_provider is not None and frontier_hlc is None:
-            frontier_hlc = frontier_provider()
-        stats["frontier_hlc"] = frontier_hlc
+        stats["frontier_hlc"] = frontier() if frontier is not None else None
         version = self._commit(
             files, {"op": "merge-mor" if mor else "merge", "batch_key": batch_key, **stats},
-            batch_key=batch_key, frontier_hlc=frontier_hlc,
+            batch_key, stats["frontier_hlc"],
         )
         out = {"skipped": False, "batch_key": batch_key, "version": version, **stats}
         if mor:
@@ -570,7 +568,7 @@ class SnapshotTable:
         files: list[dict[str, Any]],
         summary: dict[str, Any],
         batch_key: str | None = None,
-        frontier_hlc: str | None = None,
+        frontier: str | None = None,
     ) -> int:
         """Commit the next version with ``files`` as its manifest; record
         ``batch_key`` as applied and advance the frontier (never backwards)
@@ -580,12 +578,12 @@ class SnapshotTable:
         meta["files"] = files
         if batch_key is not None:
             meta["applied"][batch_key] = meta["version"]
-        if frontier_hlc:
+        if frontier:
             from ..functions.hlc import parse_hlc
 
-            wall, logical = parse_hlc(frontier_hlc)
+            wall, logical = parse_hlc(frontier)
             if (wall, logical) >= (meta["frontier"]["wall_ns"], meta["frontier"]["logical"]):
-                meta["frontier"] = {"wall_ns": wall, "logical": logical, "hlc": frontier_hlc}
+                meta["frontier"] = {"wall_ns": wall, "logical": logical, "hlc": frontier}
         meta["summary"] = {**summary, "committed_at": time.time()}
         self._write_version(meta)
         return meta["version"]
@@ -658,22 +656,6 @@ class SnapshotTable:
                 *[F.col(c) for c in META_COLS if c != "_deleted"],
             )
         )
-
-    def compact_fragmented(
-        self, spark: SparkSession, max_files_per_bucket: int = 4
-    ) -> dict[str, Any]:
-        """Maintenance policy: fold any bucket whose file count exceeds the
-        threshold (delta piles under MoR, pruned-carry + fresh files under
-        CoW) back into a single base file. Small files are the silent
-        10^10-row killer — every merge's bucket scan pays per-file open
-        cost; this keeps it O(1) per bucket."""
-        per_bucket: dict[int, int] = {}
-        for fe in self.meta["files"]:
-            per_bucket[fe["bucket"]] = per_bucket.get(fe["bucket"], 0) + 1
-        victims = sorted(b for b, n in per_bucket.items() if n > max_files_per_bucket)
-        if not victims:
-            return {"compacted": 0, "version": self.meta["version"]}
-        return self.compact(spark, victims)
 
     def gc_orphans(self, retain_versions: int = 2) -> dict[str, int]:
         """Remove data files not referenced by the current snapshot and

@@ -20,8 +20,7 @@ import json
 import os
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def read_signals(signals_dir: str) -> list[dict[str, Any]]:
@@ -52,33 +51,18 @@ def run_incremental_snapshot(
     op='r' rows. Each chunk is one idempotent merge (batch_key carries the
     signal id + chunk index → replay-safe); the registry is re-consulted
     before every chunk (schema refreshed per chunk, :60-67)."""
-    from .pipeline import load_registry_specs, user_schema
-
     table = pipeline.table
     nb = table.meta["num_buckets"]
     wall = snapshot_wall_ns if snapshot_wall_ns is not None else pipeline.cfg.snapshot_wall_ns
     stats = []
     for chunk in range(n_chunks):
-        # schema refresh before each chunk (E2 analogue)
-        ver, specs = load_registry_specs(pipeline.cfg.log_dir)
-        if ver != pipeline.registry_version:
-            pipeline.specs = specs
-            pipeline.registry_version = ver
-            pipeline.table.evolve_schema(user_schema(specs))
-
+        pipeline._poll_registry()  # schema refresh before each chunk (E2 analogue)
         lo = chunk * nb // n_chunks
         hi = (chunk + 1) * nb // n_chunks
         bucket = table.bucket_expr()
         part = source_df.filter((bucket >= lo) & (bucket < hi))
-        updates = part.select(
-            *[F.col(f.name) for f in table.schema.fields if f.name in part.columns],
-            F.lit("r").alias("op"),
-            F.lit(wall).cast("long").alias("commit_wall_ns"),
-            F.lit(0).cast("long").alias("commit_logical"),
-            F.lit(-1).cast("long").alias("seq"),
-        )
-        aligned = _align(updates, table)
-        s = table.merge(pipeline.spark, aligned, batch_key=f"backfill:{signal_id}:{chunk}")
+        s = table.merge(pipeline.spark, pipeline._snapshot_rows(part, wall),
+                        batch_key=f"backfill:{signal_id}:{chunk}")
         s["chunk"] = chunk
         pipeline._write_metrics(-2, "backfill", s, extra={})
         stats.append(s)
@@ -100,9 +84,3 @@ def process_signals(pipeline, signals_dir: str, sources: dict[str, DataFrame], n
         mark_done(sig)
     return results
 
-
-def _align(df: DataFrame, table) -> DataFrame:
-    cols = []
-    for f in table.schema.fields:
-        cols.append((F.col(f.name) if f.name in df.columns else F.lit(None)).cast(f.dataType).alias(f.name))
-    return df.select(*cols, "op", "commit_wall_ns", "commit_logical", "seq")

@@ -29,12 +29,12 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.converters import ColumnSpec, spark_output_type
-from ..functions.hlc import hlc_logical, hlc_string, hlc_wall_ns
+from ..functions.hlc import hlc_logical, hlc_wall_ns
 from ..operators.dedup import dedupe_batch
 from ..session import observed
 from ..sources.envelope import RAW_LOG_SCHEMA, parse_changefeed
@@ -102,9 +102,10 @@ class IngestConfig:
     # "poll": check the schema registry's version once per micro-batch
     #   (O(1) driver-side; evolving one batch early is safe — add-column and
     #   widen are backward compatible, pre-DDL rows null-fill either way).
-    # "exact": reference-faithful per-event field comparison — every batch
-    #   scans the raw after-image keys; unknown fields not in the registry
-    #   fail the batch retriably (dbz#2322). ~10x parse-cost overhead.
+    # "exact": reference-faithful field comparison — every batch first
+    #   collects its distinct raw after-image key sets (one extra pass over
+    #   `value`, before the parse); unknown fields not in the registry
+    #   fail the batch retriably (dbz#2322).
     drift_mode: str = "poll"
     # source format: "parquet" replay log (default), "json" (JSONL records
     # with the same RAW_LOG_SCHEMA — the reference's native wire shape),
@@ -220,6 +221,67 @@ def user_schema(specs: list[ColumnSpec]) -> T.StructType:
     return T.StructType([T.StructField(s.name, spark_output_type(s), True) for s in specs])
 
 
+def after_key_sets(raw: DataFrame, specs: list[ColumnSpec], pk_name: str) -> list[set[str]]:
+    """The drift probe (E1, hasSchemaChanged :1302-1326): the distinct
+    after-image key sets of a raw batch, in one pass whose pruned plan
+    reads only ``value`` (no typed ``from_json``). Deletes and control
+    records have no after image and contribute no set (:826-835)."""
+    keys = parse_changefeed(raw, specs, pk_name, with_drift_keys=True).select("after_keys")
+    return [set(r[0]) for r in keys.where(F.col("after_keys").isNotNull()).distinct().collect()]
+
+
+# (wall, logical) pack into one decimal: wall * _LOGICAL_SPAN + logical
+_LOGICAL_SPAN = 10_000_000_000
+
+
+def _stats_cols(with_bad_seqs: bool) -> list[Column]:
+    """The batch stats (§2.6) over parsed rows: counts, offset lineage,
+    the resolved frontier and, with a dead-letter table, the poison
+    offsets. ``process_batch`` observes them on its one parse pass and
+    aggregates them directly when the observation is not posted."""
+    cols = [
+        F.count(F.lit(1)).alias("n_raw"),
+        F.sum(F.when(F.col("is_control"), 1).otherwise(0)).alias("n_control"),
+        F.sum(F.when(F.col("is_malformed"), 1).otherwise(0)).alias("n_malformed"),
+        F.sum(F.when(~F.col("is_control") & F.col("pk").isNull(), 1).otherwise(0)).alias("n_keyless"),
+        F.min("seq").alias("min_seq"),
+        F.max("seq").alias("max_seq"),
+        # one decimal, not a struct — struct-typed observe metrics crash
+        # the py4j row bridge when null
+        F.max(
+            F.when(
+                F.col("resolved").isNotNull(),
+                hlc_wall_ns(F.col("resolved")).cast("decimal(38,0)")
+                * F.lit(_LOGICAL_SPAN).cast("decimal(38,0)")
+                + hlc_logical(F.col("resolved")).cast("decimal(38,0)"),
+            )
+        ).alias("fr_enc"),
+    ]
+    if with_bad_seqs:
+        # poison offsets (X3), capped at _BAD_SEQ_CAP longs (~800 KB): the
+        # cap bounds the RETAINED result the driver keeps, but each task
+        # still ships its full partial collect_list before the slice is
+        # applied, so a pathological fully-poisoned 10^7-row batch can
+        # transiently move ~80 MB of offsets — accepted because such
+        # batches are quarantine-path anomalies, and the healthy-batch
+        # cost is zero (the list is empty). Overflow is detected via
+        # n_malformed and the quarantine write falls back to a
+        # parse-filter pass.
+        cols.append(
+            F.slice(F.collect_list(F.when(F.col("is_malformed"), F.col("seq"))), 1, _BAD_SEQ_CAP)
+            .alias("bad_seqs")
+        )
+    return cols
+
+
+def _decode_frontier(enc: Any) -> str | None:
+    """``fr_enc`` → the canonical ``<wall>.<10-digit logical>`` HLC."""
+    if enc is None:
+        return None
+    wall, logical = divmod(int(enc), _LOGICAL_SPAN)
+    return f"{wall}.{logical:010d}"
+
+
 class CDCPipeline:
     def __init__(self, spark: SparkSession, cfg: IngestConfig):
         self.spark = spark
@@ -286,20 +348,35 @@ class CDCPipeline:
         if seed_df is None:
             return None
         key = "snapshot" if mode != "always" else f"snapshot:{self.table.meta['version']}"
-        updates = seed_df.select(
-            *[F.col(f.name) for f in self.table.schema.fields if f.name in seed_df.columns],
-            F.lit("r").alias("op"),
-            F.lit(self.cfg.snapshot_wall_ns).cast("long").alias("commit_wall_ns"),
-            F.lit(0).cast("long").alias("commit_logical"),
-            F.lit(-1).cast("long").alias("seq"),
-        )
-        updates = _align_updates(updates, self.table.schema)
         t0 = time.time()
-        stats = self.table.merge(self.spark, updates, key)
+        stats = self.table.merge(self.spark, self._snapshot_rows(seed_df, self.cfg.snapshot_wall_ns), key)
         self._write_metrics(-1, "snapshot", stats, extra={"wall_ms": (time.time() - t0) * 1e3})
         return stats
 
+    def _snapshot_rows(self, df: DataFrame, wall_ns: int) -> DataFrame:
+        """Source rows → op='r' update rows at commit ts (``wall_ns``, 0)
+        (D3), aligned to the table schema: columns the source lacks are
+        null, and seq -1 orders them before every log event."""
+        return df.select(
+            *[
+                (F.col(f.name) if f.name in df.columns else F.lit(None)).cast(f.dataType).alias(f.name)
+                for f in self.table.schema.fields
+            ],
+            F.lit("r").alias("op"),
+            F.lit(wall_ns).cast("long").alias("commit_wall_ns"),
+            F.lit(0).cast("long").alias("commit_logical"),
+            F.lit(-1).cast("long").alias("seq"),
+        )
+
     # ------------- micro-batch apply -------------
+
+    def _adopt(self, ver: int, specs: list[ColumnSpec]) -> None:
+        """Adopt registry version ``ver``: parse under ``specs`` from now on
+        and evolve the table, registering the C14 literal defaults so rows
+        written before a new column read back its default."""
+        self.specs = specs
+        self.registry_version = ver
+        self.table.evolve_schema(user_schema(specs), defaults=registry_defaults(specs))
 
     def _poll_registry(self) -> None:
         """drift_mode="poll": evolve when the registry advertises a newer
@@ -307,63 +384,33 @@ class CDCPipeline:
         cost. The registry is this engine's information_schema."""
         ver, specs = load_registry_specs(self.cfg.log_dir)
         if ver != self.registry_version:
-            self.specs = specs
-            self.registry_version = ver
-            self.table.evolve_schema(user_schema(specs), defaults=registry_defaults(specs))
+            self._adopt(ver, specs)
 
-    def _batch_agg(self, parsed: DataFrame, with_keys: bool = True):
-        """ONE pass over the batch: counts, offset lineage, resolved
-        frontier, and (exact drift mode) the distinct after-image key sets
-        (E1) — all map-side combined into a single collected row."""
-        key_sets = (
-            F.collect_set(F.to_json("after_keys")) if with_keys
-            else F.first(F.lit(None).cast("string"), ignorenulls=True)
-        )
-        return parsed.agg(
-            F.count(F.lit(1)).alias("n_raw"),
-            F.sum(F.when(F.col("is_control"), 1).otherwise(0)).alias("n_control"),
-            F.sum(F.when(F.col("is_malformed"), 1).otherwise(0)).alias("n_malformed"),
-            F.sum(F.when(~F.col("is_control") & F.col("pk").isNull(), 1).otherwise(0)).alias("n_keyless"),
-            F.min("seq").alias("min_seq"),
-            F.max("seq").alias("max_seq"),
-            F.max(
-                F.when(
-                    F.col("resolved").isNotNull(),
-                    F.struct(hlc_wall_ns(F.col("resolved")).alias("w"), hlc_logical(F.col("resolved")).alias("l")),
-                )
-            ).alias("fr"),
-            # key-set variants are few (schema changes are rare), so the
-            # set stays tiny even on 10^7-row batches
-            key_sets.alias("key_sets"),
-            # poison offsets for the quarantine path (X3): longs only,
-            # CAPPED at _BAD_SEQ_CAP (~800 KB) — within the cap the
-            # dead-letter write needs NO second parse (it filters the raw
-            # batch by offset); a batch with more malformed rows than the
-            # cap falls back to one executor-side parse-filter pass.
-            # Collected only when a dead-letter table is configured —
-            # otherwise the list could never be consumed (same gating
-            # pattern as key_sets above).
-            self._bad_seqs_agg().alias("bad_seqs"),
-        ).collect()[0]
-
-    def _bad_seqs_agg(self):
-        if self.cfg.errors_path:
-            # capped at _BAD_SEQ_CAP longs (~800 KB): the cap bounds the
-            # RETAINED result the driver keeps. On the exact-mode
-            # _batch_agg path the final aggregation also bounds what the
-            # single reduce task holds; on the observe() path each task
-            # still ships its full partial collect_list to the driver
-            # before the slice is applied, so a pathological fully-
-            # poisoned 10^7-row batch can transiently move ~80 MB of
-            # offsets — accepted because such batches are quarantine-path
-            # anomalies, and the healthy-batch cost is zero (the list is
-            # empty). Overflow is detected via n_malformed (same agg row)
-            # and the quarantine write falls back to a parse-filter pass.
-            return F.slice(
-                F.collect_list(F.when(F.col("is_malformed"), F.col("seq"))),
-                1, _BAD_SEQ_CAP,
+    def _check_drift(self, raw: DataFrame) -> None:
+        """drift_mode="exact", E1/E2: compare the batch's after-image field
+        names against the registered schema — once per micro-batch on the
+        driver, the structural win over the reference's per-event check
+        (§4). Both hasSchemaChanged clauses (…java:1302-1326) are mirrored:
+        a NEW field not in the table schema, or a registered NON-NULLABLE
+        column absent from some event's after image (DROP COLUMN signal)
+        each trigger a registry re-read. Runs before the batch is parsed,
+        so backlog events convert under the refreshed schema (E3)."""
+        sets = after_key_sets(raw, self.specs, self.cfg.pk_name)
+        new_fields = set().union(*sets) - {f.name for f in self.table.schema.fields}
+        required = {s.name for s in self.specs if not s.nullable}
+        if not new_fields and not any(required - s for s in sets):
+            return
+        ver, specs = load_registry_specs(self.cfg.log_dir)
+        if not new_fields <= {s.name for s in specs}:
+            # registry doesn't know the field either → retriable failure;
+            # the batch replays (E2 fail-retriable, dbz#2322)
+            raise RuntimeError(
+                f"schema drift: fields {sorted(new_fields)} not in registry v{ver}"
             )
-        return F.first(F.lit(None).cast("long"), ignorenulls=True)
+        # absence of a required column without a registry change is
+        # data-shape noise (e.g. partial images), not a DDL — no-op
+        if new_fields or ver != self.registry_version:
+            self._adopt(ver, specs)
 
     def process_batch(self, raw: DataFrame, batch_id: int) -> dict[str, Any]:
         # NOTE deliberately NO .persist() on the parsed batch: Spark's
@@ -372,104 +419,43 @@ class CDCPipeline:
         # cores). Re-running the codegen'd parse for the second pass is far
         # cheaper and scales linearly.
         t0 = time.time()
-        exact = self.cfg.drift_mode == "exact"
-        agg: dict[str, Any] | None = None
-        obs: Observation | None = None
-        frontier: str | None = None
-
-        if exact:
-            # reference-faithful two-pass path: the evolve decision must
-            # precede the apply, so the stats pass collects eagerly
-            parsed = parse_changefeed(raw, self.specs, self.cfg.pk_name, with_drift_keys=True)
-            row = self._batch_agg(parsed, with_keys=True)
-            if self._maybe_evolve(row["key_sets"]):
-                # rare: re-parse the batch under the refreshed schema
-                # (E2/E3 — backlog events convert against the new schema)
-                parsed = parse_changefeed(raw, self.specs, self.cfg.pk_name, with_drift_keys=True)
-                row = self._batch_agg(parsed, with_keys=True)
-            agg = {k: row[k] for k in ("n_raw", "n_control", "n_malformed", "n_keyless",
-                                       "min_seq", "max_seq", "bad_seqs")}
-            if row["fr"] is not None:
-                frontier = f"{row['fr']['w']}.{row['fr']['l']:010d}"
-
-            # idle fast path (W3): nothing to merge, no frontier to advance
-            # — commit only the checkpoint; replay of this batch is a no-op
-            if agg["n_raw"] == (agg["n_control"] or 0) and frontier is None and not agg["n_malformed"]:
-                stats = {"skipped": False, "version": self.table.meta["version"],
-                         "n_updates": 0, "n_data": 0, "frontier_hlc": None, **agg}
-                self._write_metrics(batch_id, "stream", stats,
-                                    extra={"wall_ms": (time.time() - t0) * 1e3})
-                return stats
+        if self.cfg.drift_mode == "exact":
+            self._check_drift(raw)
         else:
-            # hot path: registry poll (O(1) driver) + ONE Spark pass — the
-            # batch stats ride an observe() on the same plan the staging
-            # write executes; the resolved frontier is handed to the merge
-            # through frontier_provider (resolved after that action runs)
             self._poll_registry()
-            obs = Observation()
-            parsed = parse_changefeed(raw, self.specs, self.cfg.pk_name, with_drift_keys=False)
-            parsed = parsed.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_raw"),
-                F.sum(F.when(F.col("is_control"), 1).otherwise(0)).alias("n_control"),
-                F.sum(F.when(F.col("is_malformed"), 1).otherwise(0)).alias("n_malformed"),
-                F.sum(F.when(~F.col("is_control") & F.col("pk").isNull(), 1).otherwise(0)).alias("n_keyless"),
-                F.min("seq").alias("min_seq"),
-                F.max("seq").alias("max_seq"),
-                # (wall, logical) packed into one decimal — struct-typed
-                # observe metrics crash the py4j row bridge when null
-                F.max(
-                    F.when(
-                        F.col("resolved").isNotNull(),
-                        hlc_wall_ns(F.col("resolved")).cast("decimal(38,0)") * F.lit(10_000_000_000).cast("decimal(38,0)")
-                        + hlc_logical(F.col("resolved")).cast("decimal(38,0)"),
-                    )
-                ).alias("fr_enc"),
-                # poison offsets (X3) — see _bad_seqs_agg: rides THE one
-                # parse pass so the quarantine write never re-parses the
-                # batch; a no-op when no dead-letter table is configured
-                self._bad_seqs_agg().alias("bad_seqs"),
-            )
 
+        # ONE Spark pass: the batch stats ride an observe() on the plan the
+        # merge's write executes; the resolved frontier is read after that
+        # action runs
+        cols = _stats_cols(bool(self.cfg.errors_path))
+        obs = Observation()
+        parsed = parse_changefeed(raw, self.specs, self.cfg.pk_name, with_drift_keys=False)
         # keyless rows (no after image, no usable message key) can never be
         # merged — dropped and surfaced via metrics. Project to the
         # apply-relevant columns BEFORE dedup so the arg-max join never
         # carries before-images/topic strings (shuffle-payload prune).
-        data = parsed.filter(~F.col("is_control") & F.col("pk").isNotNull()).select(
+        data = parsed.observe(obs, *cols).filter(~F.col("is_control") & F.col("pk").isNotNull()).select(
             "pk", "commit_wall_ns", "commit_logical", "seq", "op", "after"
         )
         updates = self._to_updates(dedupe_batch(data, "pk"))
 
-        def batch_agg() -> dict[str, Any]:
+        def aggregate() -> dict[str, Any]:
             # a degenerate plan can finish without running the observe node
             log.warning("batch %d: observe metrics not posted; aggregating directly", batch_id)
-            row = self._batch_agg(parsed, with_keys=False).asDict()
-            fr = row["fr"]
-            return {**row, "fr_enc": None if fr is None else fr["w"] * 10_000_000_000 + fr["l"]}
+            return parsed.agg(*cols).collect()[0].asDict()
 
         @functools.cache
-        def obs_metrics() -> dict[str, Any]:
-            return observed(obs, fallback=batch_agg)
-
-        def frontier_from_obs():
-            enc = obs_metrics().get("fr_enc")
-            if enc is None:
-                return None
-            wall, logical = divmod(int(enc), 10_000_000_000)
-            return f"{wall}.{logical:010d}"
+        def metrics() -> dict[str, Any]:
+            return observed(obs, fallback=aggregate)
 
         stats = self.table.merge(
-            self.spark,
-            updates,
-            batch_key=f"stream:{batch_id}",
-            frontier_hlc=frontier,
-            frontier_provider=None if exact else frontier_from_obs,
+            self.spark, updates, batch_key=f"stream:{batch_id}",
+            frontier=lambda: _decode_frontier(metrics()["fr_enc"]),
         )
         if not stats.get("skipped"):
-            if agg is None:
-                agg = obs_metrics()
-            n_raw, n_control = int(agg["n_raw"]), int(agg["n_control"] or 0)
-            n_malformed = int(agg["n_malformed"] or 0)
+            m = metrics()
+            n_raw, n_control = int(m["n_raw"]), int(m["n_control"] or 0)
+            n_malformed = int(m["n_malformed"] or 0)
             # quarantine poison records instead of killing the stream (X3 —
             # replaying a malformed byte stream never heals; dead-letter
             # table is the distributed-sane version of "retriable").
@@ -489,7 +475,7 @@ class CDCPipeline:
                     )
                     poison = raw.join(bad_df, "offset", "left_semi")
                 else:
-                    bad = sorted(int(s) for s in (agg.get("bad_seqs") or []))
+                    bad = sorted(int(s) for s in (m.get("bad_seqs") or []))
                     if len(bad) <= 1000:
                         poison = raw.filter(F.col("offset").isin(bad))
                     else:
@@ -500,8 +486,8 @@ class CDCPipeline:
                 )
             stats.update(
                 n_raw=n_raw, n_control=n_control, n_data=n_raw - n_control,
-                n_malformed=n_malformed, n_keyless=int(agg["n_keyless"] or 0),
-                min_seq=agg["min_seq"], max_seq=agg["max_seq"],
+                n_malformed=n_malformed, n_keyless=int(m["n_keyless"] or 0),
+                min_seq=m["min_seq"], max_seq=m["max_seq"],
             )
         self._write_metrics(batch_id, "stream", stats, extra={"wall_ms": (time.time() - t0) * 1e3})
         return stats
@@ -520,44 +506,6 @@ class CDCPipeline:
                 src = F.col(f"after.{f.name}") if f.name in after_fields else F.lit(None)
                 cols.append(src.cast(f.dataType).alias(f.name))
         return deduped.select(*cols, "op", "commit_wall_ns", "commit_logical", "seq")
-
-    def _maybe_evolve(self, key_sets: list[str] | None) -> bool:
-        """E1/E2: compare the batch's after-image field names (pre-computed
-        in the parse pass) against the registered schema — once per
-        micro-batch on the driver, the structural win over the reference's
-        per-event check (§4). Deletes never contribute (no after image,
-        …StreamingChangeEventSource.java:826-835). Both hasSchemaChanged
-        clauses (…java:1302-1326) are mirrored: a NEW field not in the
-        registered schema, or a registered NON-NULLABLE column absent from
-        some event's after image (DROP COLUMN signal) each trigger a
-        registry re-read. Returns True when the schema was refreshed
-        (caller re-parses the batch)."""
-        import json as _json
-
-        sets = [set(_json.loads(ks)) for ks in (key_sets or []) if ks]
-        incoming: set[str] = set().union(*sets) if sets else set()
-        known = {f.name for f in self.table.schema.fields}
-        new_fields = incoming - known
-        required = {s.name for s in self.specs if not s.nullable}
-        dropped_signal = any(required - s for s in sets)
-        if not new_fields and not dropped_signal:
-            return False
-        ver, specs = load_registry_specs(self.cfg.log_dir)
-        new_schema = user_schema(specs)
-        if new_fields and not new_fields.issubset({f.name for f in new_schema.fields}):
-            # registry doesn't know the field either → retriable failure;
-            # the batch replays (E2 fail-retriable, dbz#2322)
-            raise RuntimeError(
-                f"schema drift: fields {sorted(new_fields)} not in registry v{ver}"
-            )
-        if ver == self.registry_version and not new_fields:
-            # absence of a required column without a registry change is
-            # data-shape noise (e.g. partial images), not a DDL — no-op
-            return False
-        self.specs = specs
-        self.registry_version = ver
-        self.table.evolve_schema(new_schema, defaults=registry_defaults(specs))
-        return True
 
     # ------------- streaming driver (W2, W3) -------------
 
@@ -738,9 +686,3 @@ class CDCPipeline:
         self.table = SnapshotTable.load(self.cfg.table_path)
         return self.table.read_state(self.spark)
 
-
-def _align_updates(df: DataFrame, schema: T.StructType) -> DataFrame:
-    cols = []
-    for f in schema.fields:
-        cols.append((F.col(f.name) if f.name in df.columns else F.lit(None)).cast(f.dataType).alias(f.name))
-    return df.select(*cols, "op", "commit_wall_ns", "commit_logical", "seq")

@@ -11,7 +11,10 @@ from debezium_connector_cockroachdb_spark.sources.generator import (
     seed_table,
     write_log,
 )
-from debezium_connector_cockroachdb_spark.streaming.backfill import process_signals
+from debezium_connector_cockroachdb_spark.streaming.backfill import (
+    process_signals,
+    run_incremental_snapshot,
+)
 from debezium_connector_cockroachdb_spark.streaming.multitable import (
     MultiTablePipeline,
     partition_tables,
@@ -68,6 +71,33 @@ def test_incremental_snapshot_backfills_in_chunks(spark, tmp_path):
     # replaying the same signal id would be a no-op per chunk (batch keys)
     applied = pipe.table.meta["applied"]
     assert sum(1 for k in applied if k.startswith("backfill:sig-1:")) == 4
+
+
+def test_backfill_after_ddl_reads_registered_default(spark, tmp_path):
+    """C14 through the backfill's registry refresh: a DDL that adds a
+    column with a literal default lands after the stream drained; the
+    backfill adopts it with its default, so rows written before the DDL
+    read back 'PENDING', as they do when the stream adopts the DDL."""
+    gcfg = GeneratorConfig(num_keys=40, num_events=200, resolved_every=100, n_files=2)
+    pipe, log_dir = _mk_pipe(spark, tmp_path, "ddl", gcfg)
+    pipe.start_stream(available_now=True).awaitTermination()
+    state = pipe.read_state()
+    live = spark.createDataFrame(state.collect(), state.schema)
+    with open(os.path.join(log_dir, "_schema", "v2.json"), "w") as f:
+        json.dump({"version": 2, "columns": [
+            {"name": "doc_id", "crdb_type": "STRING", "nullable": False},
+            {"name": "tokens", "crdb_type": "INT4[]", "nullable": False},
+            {"name": "n_tok", "crdb_type": "INT4", "nullable": False},
+            {"name": "source", "crdb_type": "STRING", "nullable": False},
+            {"name": "status", "crdb_type": "STRING", "nullable": True,
+             "default": "'PENDING':::STRING"},
+        ]}, f)
+
+    run_incremental_snapshot(pipe, live, signal_id="sig-ddl", n_chunks=2)
+    assert pipe.registry_version == 2
+    rows = pipe.read_state().collect()
+    assert len(rows) == live.count() > 0
+    assert all(r["status"] == "PENDING" for r in rows)
 
 
 def test_multitable_routing(spark, tmp_path):

@@ -6,11 +6,9 @@ CockroachDBChangeRecordEmitter.java:88-119, FIXTURES.md §2)."""
 import pytest
 from pyspark.sql import Row
 
-from debezium_connector_cockroachdb_spark.sources.envelope import (
-    parse_changefeed,
-    raw_json_field_names,
-)
+from debezium_connector_cockroachdb_spark.sources.envelope import parse_changefeed
 from debezium_connector_cockroachdb_spark.sources.generator import TOKENIZED_SEQUENCES_SPECS
+from debezium_connector_cockroachdb_spark.streaming.pipeline import after_key_sets
 
 PK = "doc_id"
 
@@ -113,10 +111,10 @@ def test_drift_probe_sees_new_fields_not_deletes(spark):
         ('["d2"]', '{"after":{"doc_id":"d2","tokens":[1],"n_tok":1,"source":"cc","lang":"en"},"op":"c","ts_ns":2}'),
         ('["d3"]', '{"op":"d","ts_ns":3}'),
     ]
-    keys = raw_json_field_names(mk_raw(spark, rows), "after")
-    assert "lang" in keys
+    sets = after_key_sets(mk_raw(spark, rows), TOKENIZED_SEQUENCES_SPECS, PK)
+    assert "lang" in set().union(*sets)
     df_del_only = mk_raw(spark, [('["d3"]', '{"op":"d","ts_ns":3}')])
-    assert raw_json_field_names(df_del_only, "after") == []
+    assert after_key_sets(df_del_only, TOKENIZED_SEQUENCES_SPECS, PK) == []
 
 
 def test_table_from_topic_fallback(spark):

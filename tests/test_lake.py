@@ -131,7 +131,7 @@ def test_merge_is_idempotent_on_state(spark, tmp_table_dir):
 
 def test_empty_merge_commits_frontier(spark, tmp_table_dir):
     t = mk(tmp_table_dir)
-    r = t.merge(spark, upd(spark, []), "b1", frontier_hlc="12345.0000000001")
+    r = t.merge(spark, upd(spark, []), "b1", frontier=lambda: "12345.0000000001")
     assert r["n_updates"] == 0
     t2 = SnapshotTable.load(t.path)
     assert t2.meta["frontier"]["wall_ns"] == 12345
@@ -195,7 +195,7 @@ def test_mor_auto_compaction_and_tombstone_gc(spark, tmp_path):
     # tombstone GC: delete below the frontier disappears after compaction
     mor2 = SnapshotTable.load(mor.path)
     mor2.merge(spark, upd(spark, [("a", None, None, None, "d", 500, 0, 50)]), "bd",
-               frontier_hlc="1000.0000000000")
+               frontier=lambda: "1000.0000000000")
     mor2.compact(spark)
     raw = mor2.read_raw(spark).collect()
     assert all(not r["_deleted"] for r in raw), "GC'd tombstone should be gone"
@@ -338,35 +338,6 @@ def test_concurrent_commit_detected(spark, tmp_table_dir):
     t1.merge(spark, mk([("b", 2, "c", 101, 0, 2)]), "b2")  # advances _current
     with pytest.raises(RuntimeError, match="concurrent commit"):
         stale.merge(spark, mk([("c", 3, "c", 102, 0, 3)]), "b3")
-
-
-def test_compact_fragmented_policy(spark, tmp_table_dir):
-    """Buckets fragmented by pruning-carries fold back to one file; state
-    is unchanged and under-threshold buckets are left alone."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType(), True),
-        T.StructField("v", T.IntegerType(), True),
-    ])
-    t = SnapshotTable.create(tmp_table_dir, schema, "doc_id", num_buckets=1)
-    mk = lambda rows: spark.createDataFrame(
-        rows, "doc_id string, v int, op string, commit_wall_ns long, commit_logical long, seq long"
-    )
-    # disjoint key ranges -> every merge prunes the prior files and adds one
-    for g in range(4):
-        t.merge(spark, mk([(f"k{g}{i:02d}", g * 100 + i, "c", 100 + g, 0, g * 100 + i)
-                           for i in range(5)]), f"b{g}")
-    assert len(t.meta["files"]) >= 4
-    before = sorted((r["doc_id"], r["v"]) for r in t.read_state(spark).collect())
-
-    out = t.compact_fragmented(spark, max_files_per_bucket=2)
-    assert out["compacted"] == 1
-    assert len(t.meta["files"]) == 1
-    after = sorted((r["doc_id"], r["v"]) for r in t.read_state(spark).collect())
-    assert after == before
-    # idempotent below the threshold
-    assert t.compact_fragmented(spark, max_files_per_bucket=2)["compacted"] == 0
 
 
 def test_time_travel_reads_pinned_versions(spark, tmp_table_dir):

@@ -425,3 +425,50 @@ def test_unposted_observe_falls_back_to_direct_aggregation(spark, tmp_path, monk
     assert fb_stats["frontier_hlc"] is not None
     assert sorted(normalize(fb.read_state().collect()), key=lambda r: r["doc_id"]) == sorted(
         normalize(ref.read_state().collect()), key=lambda r: r["doc_id"])
+
+
+def test_poll_and_exact_drift_share_one_path(spark, tmp_path):
+    """With no DDL in the log, the two drift modes differ only in their
+    drift step: the same batches give the same per-batch stats, frontier
+    and table version, and the same final state. The last batch holds only
+    blank / tombstone values; it commits an empty version in both modes."""
+    import dataclasses
+
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    gcfg, icfg, log_dir, seed = build_env(spark, tmp_path)
+    raw = spark.read.parquet(log_dir)
+    end = raw.agg(F.max("offset")).first()[0] + 1
+    step = end // 4 + 1
+    blank = spark.createDataFrame(
+        [Row(topic="t", partition=0, offset=10**9 + i, ts_ms=0, key='["k"]', value=v)
+         for i, v in enumerate([None, "", "   "])],
+        "topic string, partition int, offset long, ts_ms long, key string, value string",
+    )
+    batches = [raw.filter(F.col("offset").between(lo, lo + step - 1)) for lo in range(0, end, step)]
+    batches.append(blank)
+    keys = ["table_version", "n_raw", "n_control", "n_malformed", "n_keyless",
+            "min_seq", "max_seq", "frontier_hlc"]
+
+    def run(mode):
+        pipe = CDCPipeline(spark, dataclasses.replace(
+            icfg, drift_mode=mode, table_path=str(tmp_path / mode),
+            metrics_path=str(tmp_path / f"{mode}_m")))
+        pipe.run_snapshot(seed)
+        for i, b in enumerate(batches):
+            pipe.process_batch(b, batch_id=i)
+        metrics = {r["batch_id"]: {k: r[k] for k in keys}
+                   for r in pipe.read_metrics().filter("phase = 'stream'").collect()}
+        return pipe, metrics
+
+    poll, poll_m = run("poll")
+    exact, exact_m = run("exact")
+    assert len(poll_m) == len(batches)
+    assert exact_m == poll_m
+    idle = poll_m[len(batches) - 1]
+    assert idle["n_raw"] == idle["n_control"] == 3
+    assert idle["table_version"] == poll_m[len(batches) - 2]["table_version"] + 1
+    assert any(m["frontier_hlc"] for m in poll_m.values())
+    assert sorted(normalize(exact.read_state().collect()), key=lambda r: r["doc_id"]) == sorted(
+        normalize(poll.read_state().collect()), key=lambda r: r["doc_id"])
