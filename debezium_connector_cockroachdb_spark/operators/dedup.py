@@ -10,16 +10,18 @@ with the greatest ordering tuple wins — and the same primitive,
 read-time resolution and compaction (``sources/lake.py``). No identity
 ``dropDuplicates`` runs: a redelivery under a fresh offset carries the same
 payload, so either copy wins equivalently; a redelivery under the same
-offset repeats the full tuple and collapses in ``dedupe_batch``'s per-key
-dedup; cross-batch replays are no-ops by the merge guard, so no LRU memory
-bound is needed at all.
+offset repeats the full tuple, and the arg-max keeps one row per key anyway;
+cross-batch replays are no-ops by the merge guard, so no LRU memory bound
+is needed at all.
 
-Per-key ordering is an **arg-max aggregation**, not a window sort: the
-ordering tuple's ``max(struct(...))`` gets map-side partial aggregation
-(each input partition reduces its own hot keys before the shuffle), so a
-key with 10^6 updates ships ~#partitions rows instead of 10^6 — the
-hot-key-skew story at 10^10 events. A window ``row_number()`` would shuffle
-and sort every row.
+Per-key ordering is a **top-1 window**: ``row_number() = 1`` over the key,
+ordered by the tuple descending. Spark (3.5+) plans it as a map-side
+``WindowGroupLimit … Partial`` (each input partition keeps only its own
+top row per key), one Exchange on the key, then the final limit and
+window. A key with 10^6 updates therefore ships ~#partitions rows instead
+of 10^6 — the hot-key-skew story at 10^10 events — and the input is
+scanned once: no winner aggregate forks the plan, no join brings the
+payload back.
 
 Ordering key: (commit_wall_ns, commit_logical, seq) — HLC order with the
 log offset as tie-break, matching the reference's arrival-order application
@@ -28,55 +30,26 @@ of same-HLC delete+insert sequences (FIXTURES.md scenario 6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 ORDERING = ["commit_wall_ns", "commit_logical", "seq"]
 
 
 def argmax_rows(df: DataFrame, pk_col: str, ordering: list[str]) -> DataFrame:
-    """The rows of ``df`` holding each key's greatest ``ordering`` tuple,
-    in ``df``'s column layout.
+    """Exactly one row per key of ``df``: the one holding the key's greatest
+    ``ordering`` tuple, in ``df``'s column layout.
 
-    Two-phase arg-max: phase 1 aggregates ONLY the ordering tuple per key —
-    map-side combinable, and the aggregation never touches the nested
-    payload (a payload-wide ``max(struct(...))`` forces ObjectHashAggregate
-    into its sort-based fallback past 128 groups; measured 64s vs ~4s on a
-    2M-row batch). Phase 2 joins the winners back; the winner side is
-    (pk + the tuple) so the shuffle-hash build is tiny, and the payload side
-    is hashed, never sorted. Catalyst folds the ordering-equality filter
-    into the join keys, so the payload shuffle hashes on (tuple, pk) —
-    which also spreads a hot key's rows across partitions (skew-immune,
-    unlike a pk-partitioned window).
-
-    No trailing dedup: rows sharing a key's full winning tuple all survive.
-    Stored table rows never do — seq is the globally-unique log offset, a
-    micro-batch's offset range never overlaps another's, ``dedupe_batch``
-    leaves one row per key per batch, and replayed batches are dropped by
-    the batch_key guard before anything is written — and a
-    ``dropDuplicates`` here would re-introduce exactly the payload-wide
-    aggregate this function exists to avoid (Catalyst plans it as a
-    first(<payload>) aggregate over nested arrays)."""
-    win = df.groupBy(pk_col).agg(
-        F.max(F.struct(*[F.col(c) for c in ordering])).alias("_win")
-    )
-    cond = F.lit(True)
-    for c in ordering:
-        cond = cond & (F.col(c) == F.col(f"_win.{c}"))
-    return (
-        df.join(win.hint("shuffle_hash"), pk_col)
-        .filter(cond)
-        .select(*df.columns)
-    )
+    Tuples compare field by field with NULL below every value (the order
+    of ``max(struct(...))``), so a key whose only rows carry a NULL field
+    still keeps one row. Rows sharing a key's full winning tuple — two
+    copies of one record under the same offset — resolve to one of them;
+    such copies carry the same payload, so which one is immaterial."""
+    w = Window.partitionBy(pk_col).orderBy(*[F.desc_nulls_last(c) for c in ordering])
+    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 def dedupe_batch(df: DataFrame, pk_col: str = "pk") -> DataFrame:
     """One surviving event per key of a micro-batch: max (commit_wall_ns,
-    commit_logical, seq). Returns the original column layout.
-
-    Unlike stored rows, batch input can repeat a full tuple — two copies of
-    one record under the same offset (Kafka at-least-once re-reads, where
-    seq is only per-partition-unique) — and the CoW merge needs one row per
-    key. The per-key ``dropDuplicates`` after the arg-max shuffles only the
-    ~#keys winner rows, never the full batch."""
-    return argmax_rows(df, pk_col, ORDERING).dropDuplicates([pk_col])
+    commit_logical, seq). Returns the original column layout."""
+    return argmax_rows(df, pk_col, ORDERING)

@@ -432,8 +432,8 @@ class CDCPipeline:
         parsed = parse_changefeed(raw, self.specs, self.cfg.pk_name, with_drift_keys=False)
         # keyless rows (no after image, no usable message key) can never be
         # merged — dropped and surfaced via metrics. Project to the
-        # apply-relevant columns BEFORE dedup so the arg-max join never
-        # carries before-images/topic strings (shuffle-payload prune).
+        # apply-relevant columns BEFORE dedup so the arg-max's sort and
+        # shuffle never carry before-images/topic strings (payload prune).
         data = parsed.observe(obs, *cols).filter(~F.col("is_control") & F.col("pk").isNotNull()).select(
             "pk", "commit_wall_ns", "commit_logical", "seq", "op", "after"
         )

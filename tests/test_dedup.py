@@ -87,3 +87,80 @@ def test_redelivered_winner_same_seq_collapses(spark):
     out = dedupe_batch(df, "pk").collect()
     assert len(out) == 1
     assert out[0]["payload"] == "v1"
+
+
+def test_null_ordering_field_keeps_its_key(spark):
+    """A NULL ordering field sorts below every value (the order of
+    ``max(struct)``): a key whose only row carries one still keeps that
+    row, and a non-null tuple beats a null one on the same key."""
+    df = mk(spark, [
+        ("t", "c", 100, None, 1, "a", "only"),
+        ("t", "c", 100, 0, 2, "b", "v"),
+        ("t", "c", 100, None, 5, "c", "null-logical"),
+        ("t", "u", 100, 0, 3, "c", "non-null-wins"),
+    ])
+    got = {r["pk"]: r["val"] for r in dedupe_batch(df).collect()}
+    assert got == {"a": "only", "b": "v", "c": "non-null-wins"}
+
+
+def test_identical_stored_tuples_resolve_to_one_row(spark):
+    """Two stored-ordering rows of one key with the same full tuple
+    resolve to ONE row through the arg-max the MoR read and compaction
+    use; the greater tuple of another key still wins on its own."""
+    from debezium_connector_cockroachdb_spark.operators.dedup import argmax_rows
+    from debezium_connector_cockroachdb_spark.sources.lake import _COMMIT_ORDER
+
+    df = spark.createDataFrame(
+        [("k1", "x", 100, 0, 7), ("k1", "x", 100, 0, 7), ("k2", "old", 90, 0, 1), ("k2", "new", 90, 0, 2)],
+        "doc_id string, v string, _commit_wall_ns long, _commit_logical long, _commit_seq long",
+    )
+    out = argmax_rows(df, "doc_id", _COMMIT_ORDER).collect()
+    assert sorted((r["doc_id"], r["v"]) for r in out) == [("k1", "x"), ("k2", "new")]
+    assert out[0].asDict().keys() == {"doc_id", "v", *_COMMIT_ORDER}
+
+
+def test_hot_key_flood_ships_one_row_per_key_per_partition(spark):
+    """A single key flooded with 24k events over 4 input partitions (plus
+    cold keys): the map-side partial top-1 ships at most one row per key
+    per input partition into the shuffle, and every key keeps its max
+    (wall, logical, seq) row."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def stages():
+        it = store.stageList(None, False, False, sc._gateway.new_array(sc._jvm.double, 0), None).iterator()
+        out = {}
+        while it.hasNext():
+            s = it.next()
+            out[int(s.stageId())] = s
+        return out
+
+    n, cold = 24_000, 5
+    i = F.col("id")
+    df = spark.range(0, n, numPartitions=4).select(
+        F.lit("t").alias("table_name"), F.lit("u").alias("op"),
+        ((i * 7919) % 5000).alias("commit_wall_ns"), (i % 3).alias("commit_logical"),
+        i.alias("seq"),
+        F.when(i % 1000 < cold, F.concat(F.lit("cold"), (i % 1000).cast("string")))
+        .otherwise(F.lit("hot")).alias("pk"),
+        i.cast("string").alias("val"),
+    )
+    want = {}
+    for r in df.collect():
+        t = (r["commit_wall_ns"], r["commit_logical"], r["seq"])
+        if r["pk"] not in want or t > want[r["pk"]][0]:
+            want[r["pk"]] = (t, r["val"])
+    assert len(want) == cold + 1
+
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(stages())
+    got = dedupe_batch(df).collect()
+    bus.waitUntilEmpty()
+    shuffled = [int(s.shuffleWriteRecords()) for k, s in stages().items() if k not in before]
+    assert 0 < sum(shuffled) <= df.rdd.getNumPartitions() * len(want), shuffled
+    assert {
+        r["pk"]: ((r["commit_wall_ns"], r["commit_logical"], r["seq"]), r["val"]) for r in got
+    } == want

@@ -1,15 +1,17 @@
 """Physical-plan assertions: the plans we designed for are the plans
-Catalyst actually produces (SURVEY §4 — pushdown, broadcast, partial
-aggregation instead of window sorts)."""
+Catalyst actually produces (SURVEY §4 — pushdown, broadcast, map-side
+partial reduction before every shuffle)."""
+
+import re
 
 from pyspark.sql import functions as F
 
 from debezium_connector_cockroachdb_spark.operators.dedup import dedupe_batch
-from debezium_connector_cockroachdb_spark.sources.envelope import parse_changefeed
+from debezium_connector_cockroachdb_spark.sources.envelope import RAW_LOG_SCHEMA, parse_changefeed
 from debezium_connector_cockroachdb_spark.sources.generator import (
     TOKENIZED_SEQUENCES_SPECS,
     GeneratorConfig,
-    event_log,
+    write_log,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -39,17 +41,30 @@ def test_filter_and_projection_push_into_parquet_scan(spark):
     assert "props" not in read_schema and "event_type" not in read_schema
 
 
-def test_last_writer_wins_is_partial_agg_not_window(spark):
-    """The per-key ordering operator must plan as hash aggregation with a
-    map-side partial phase (hot-key safe), never as a Window sort."""
-    cfg = GeneratorConfig(num_keys=20, num_events=100, n_files=1)
-    parsed = parse_changefeed(event_log(spark, cfg), TOKENIZED_SEQUENCES_SPECS, "doc_id")
-    lww = dedupe_batch(parsed.filter(~F.col("is_control")), "pk")
-    plan = plan_of(lww)
-    assert "Window" not in plan
-    assert plan.count("HashAggregate") >= 2 or "ObjectHashAggregate" in plan or "SortAggregate" in plan
-    # partial aggregation marker: two aggregate nodes around the exchange
-    assert "Exchange" in plan
+def test_last_writer_wins_is_partial_window_group_limit(spark, tmp_path):
+    """The per-key ordering operator must plan as a top-1 window with a
+    map-side partial limit (hot-key safe: each input partition ships at
+    most one row per key) below ONE exchange on the key — no winner
+    aggregate, no join-back, and the input scanned and parsed once."""
+    cfg = GeneratorConfig(num_keys=20, num_events=100, n_files=2)
+    write_log(spark, cfg, str(tmp_path / "log"))
+    raw = spark.read.schema(RAW_LOG_SCHEMA).parquet(str(tmp_path / "log"))
+    parsed = parse_changefeed(raw, TOKENIZED_SEQUENCES_SPECS, "doc_id")
+    plan = plan_of(dedupe_batch(parsed.filter(~F.col("is_control")), "pk"))
+    assert "Join" not in plan and "Aggregate" not in plan, plan
+    assert len(re.findall(r"^\(\d+\) Scan ", plan, re.M)) == 1, plan
+    exchanges = [int(n) for n in re.findall(r"^\((\d+)\) Exchange$", plan, re.M)]
+    assert len(exchanges) == 1 and "hashpartitioning(pk" in plan, plan
+    # formatted explain numbers operators children-first: the Partial limit
+    # sits below the exchange, the Final one above it
+    limits = dict(
+        (mode, int(n))
+        for n, mode in re.findall(
+            r"^\((\d+)\) WindowGroupLimit\n(?:.*\n)*?Arguments: .*row_number\(\), 1, (Partial|Final)$",
+            plan, re.M,
+        )
+    )
+    assert limits["Partial"] < exchanges[0] < limits["Final"], plan
 
 
 def test_merge_broadcasts_small_update_side(spark, tmp_path):
@@ -130,8 +145,8 @@ def test_exact_topk_two_stage_equals_global_sort(spark):
 def test_mor_read_resolution_never_aggregates_payload(spark, tmp_path):
     """The MoR read-time arg-max must aggregate only the 3-long ordering
     tuple — a payload-wide max(struct) forces sort-based aggregation over
-    nested token arrays (the measured 64s-vs-4s trap). The winner set is
-    joined back hash-wise (never a payload sort)."""
+    nested token arrays (the measured 64s-vs-4s trap). It is the same
+    partial top-1 window as the micro-batch, with no join-back."""
     from pyspark.sql import types as T
 
     from debezium_connector_cockroachdb_spark.sources.lake import SnapshotTable
@@ -155,7 +170,8 @@ def test_mor_read_resolution_never_aggregates_payload(spark, tmp_path):
     for line in plan.splitlines():
         if "Functions" in line:
             assert "tokens" not in line, f"payload-wide aggregate: {line}"
-    assert "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
+    assert "Join" not in plan
+    assert re.search(r"row_number\(\), 1, Partial$", plan, re.M), plan
 
 
 def test_slices_add_no_shuffle_and_assembly_adds_one(spark):
@@ -175,7 +191,6 @@ def test_slices_add_no_shuffle_and_assembly_adds_one(spark):
     p_flat = plan_of(pack_sequences(df, 64, num_buckets=8))
     p_slices = plan_of(pack_sequences_slices(df, 64, num_buckets=8))
     p_asm = plan_of(assemble_packs(pack_sequences_slices(df, 64, num_buckets=8)))
-    import re
 
     def shuffles(p: str) -> int:
         # tree nodes like "Exchange (17)"; excludes BroadcastExchange and
