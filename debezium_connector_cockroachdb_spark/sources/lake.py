@@ -16,12 +16,19 @@ are identical):
      map, CockroachDBOffsetContext.java:98-112 — offsets flushed only after
      records are produced → at-least-once upstream, dedup makes it effective
      exactly-once).
-  3. **Bucket-pruned copy-on-write MERGE** — rows hash into ``num_buckets``
-     by ``xxhash64(pk)``; a merge rewrites only the buckets its updates
-     touch. At 10^10 rows with 4096 buckets, a micro-batch touching 1% of
-     keys rewrites ~41 buckets, not the table. Deletes persist as tombstone
-     rows (``_deleted``) so the commit-timestamp guard keeps working for
-     late/out-of-order events that arrive after the delete.
+  3. **One write path, two layouts** — rows hash into ``num_buckets`` by
+     ``xxhash64(pk)``; every merge appends its deduped rows as delta files
+     (write cost ∝ update count) and then compacts: per-key arg-max over
+     (wall, logical, seq) across a bucket's base + delta files. The merge
+     mode only picks which buckets compact: ``cow`` every bucket that holds
+     a delta (read-optimized), ``mor`` only buckets past the size-ratio
+     trigger (write-optimized; readers resolve the rest). At 10^10 rows
+     with 4096 buckets, a micro-batch touching 1% of keys rewrites ~41
+     buckets, not the table, and within them only the base files whose pk
+     range meets a delta's. Deletes persist as tombstone rows
+     (``_deleted``) so the commit-timestamp order keeps working for
+     late/out-of-order events that arrive after the delete; MoR compaction
+     purges tombstones below the resolved frontier.
   4. **Schema evolution** — add-column / type-widen are metadata-only
      commits; old data files are aligned (null-fill / cast) at read time,
      exactly Iceberg's lazy evolution.
@@ -35,23 +42,16 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import argmax_rows
-from ..session import observed
-
-# forced-broadcast cap for the CoW merge's update side (rows): the serial
-# driver-side hash build is still 3x cheaper than AQE's sort-merge of the
-# payload side at micro-batch scale
-_BROADCAST_THRESHOLD = 2_000_000
 
 META_COLS = ["_deleted", "_commit_wall_ns", "_commit_logical", "_commit_seq"]
 # the stored HLC ordering key: per key, the greatest tuple is the state
@@ -276,11 +276,11 @@ class SnapshotTable:
         return out
 
     def read_raw(self, spark: SparkSession, buckets: set[int] | None = None) -> DataFrame:
-        """All current rows incl. tombstones + system columns. Under MoR,
-        buckets carrying delta files are resolved at read time: per-key
-        arg-max over (wall, logical, seq) across base+deltas — identical
-        ordering to the CoW merge guard, so both modes yield the same
-        state. Delta-free buckets pass through without a shuffle.
+        """All current rows incl. tombstones + system columns. Buckets
+        carrying delta files are resolved at read time: per-key arg-max
+        over (wall, logical, seq) across base+deltas — the same arg-max
+        compaction writes, so the state is the same before and after it.
+        Delta-free buckets pass through without a shuffle.
         ``buckets`` restricts the scan to those buckets (keys hash to
         exactly one bucket, so per-bucket reads are self-contained)."""
         files = self.meta["files"]
@@ -320,16 +320,13 @@ class SnapshotTable:
         update plan itself (available only after the write ran) instead of
         paying a separate aggregation pass.
 
-        The table's write mode supplies the new file list and stats:
-
-        * ``cow`` (default) — copy-on-write: join against touched buckets,
-          rewrite them. Read-optimized; write cost ∝ touched-bucket size.
-        * ``mor`` — merge-on-read: append the deduped updates as delta
-          files (NO join, write cost ∝ update count); readers resolve
-          per-key arg-max lazily; buckets auto-compact when their delta
-          count exceeds ``mor.max-deltas-per-bucket``. This is the
-          update-heavy-workload mode: a micro-batch touching 1% of keys in
-          every bucket writes 1% of the data instead of 100%.
+        One write path for both modes: the updates land as delta files in
+        their buckets (no target scan, no join; write cost ∝ update
+        count) and commit; then :meth:`compact` folds the buckets
+        :meth:`_compaction_victims` picks. Readers resolve any delta still
+        standing with the same arg-max, so the state is exact between the
+        two commits too; a late/stale event loses the arg-max and is a
+        no-op (FIXTURES scenario 12).
         """
         if batch_key in self.meta["applied"]:
             return {"skipped": True, "batch_key": batch_key, "version": self.meta["version"]}
@@ -342,154 +339,38 @@ class SnapshotTable:
             F.col("commit_logical").alias("_commit_logical"),
             F.col("seq").alias("_commit_seq"),
         )
-        mor = self.merge_mode == "mor"
-        if mor:
-            files, stats = self._merge_mor(spark, rows)
-        else:
-            files, stats = self._merge_cow(spark, rows, batch_key)
-        stats["frontier_hlc"] = frontier() if frontier is not None else None
+        # ONE Spark pass: the delta write IS the apply; update count and
+        # touched buckets come from the written parquet footers
+        new_files = self._write_data(spark, rows, self.meta["num_buckets"], kind="delta")
+        stats = {
+            "n_updates": sum(fe["rows"] for fe in new_files),
+            "touched_buckets": len({fe["bucket"] for fe in new_files if fe["rows"]}),
+            "delta_files": len(new_files),
+            "frontier_hlc": frontier() if frontier is not None else None,
+        }
         version = self._commit(
-            files, {"op": "merge-mor" if mor else "merge", "batch_key": batch_key, **stats},
+            self.meta["files"] + new_files, {"op": "merge", "batch_key": batch_key, **stats},
             batch_key, stats["frontier_hlc"],
         )
         out = {"skipped": False, "batch_key": batch_key, "version": version, **stats}
-        if mor:
-            # auto-compaction: a bucket compacts when its delta FILE count
-            # passes the soft trigger AND its delta ROWS reach
-            # compact_min_delta_ratio of its base rows (LSM-style size-ratio —
-            # see the property docstrings: the file trigger alone forces a
-            # full-table rewrite every max_deltas batches once steady
-            # micro-batches touch every bucket), or unconditionally at the
-            # hard file cap (read health). Manifests written before row counts
-            # existed fall back to the file trigger alone.
-            to_compact = self._compaction_victims(self.meta["files"])
-            if to_compact:
-                out["compacted_buckets"] = len(to_compact)
-                t0 = time.time()
-                out["version"] = self.compact(spark, to_compact)["version"]
-                out["compact_secs"] = round(time.time() - t0, 3)
+        to_compact = self._compaction_victims(self.meta["files"])
+        if to_compact:
+            t0 = time.time()
+            c = self.compact(spark, to_compact)
+            out.update(version=c["version"], compacted_buckets=len(to_compact),
+                       pruned_files=c["pruned_files"], compact_secs=round(time.time() - t0, 3))
         return out
 
-    def _merge_cow(
-        self, spark: SparkSession, u_rows_plan: DataFrame, batch_key: str
-    ) -> tuple[list[dict[str, Any]], dict[str, Any]]:
-        """Copy-on-write apply: (new file list, stats).
-
-        Guard: an update only lands if its (wall, logical, seq) exceeds the
-        stored commit of the matching row — late/stale events are no-ops
-        (FIXTURES scenario 12).
-        """
-        pk = self.pk_col
-        user_cols = [f.name for f in self.schema.fields]
-
-        # ONE pass over the (parse→dedup) update chain: stage the physical
-        # row image as parquet. Downstream consumers (bucket probe, both
-        # join sides) read the staged columnar files — deliberately NOT
-        # .persist(): Spark's in-memory cache collapses on nested
-        # array/struct rows (70s+ builds vs a sub-second parquet
-        # round-trip) and the update count comes free from the footers.
-        staging = os.path.join(self.path, "staging", batch_key.replace(":", "_"))
-        _write_buckets(spark, u_rows_plan, self.meta["num_buckets"], staging)
-        n_updates, per_bucket, u_ranges = _staged_stats(staging, pk)
-        touched = sorted(per_bucket)
-        # file-level pruning inside touched buckets (Iceberg column-stats
-        # analogue): a target file whose pk [min,max] cannot intersect the
-        # bucket's update range holds no update pk — carry it untouched
-        # instead of rewriting it. Safe for the not-matched insert path
-        # too: a pruned file cannot contain any update pk by construction.
-        target_files: list[dict[str, Any]] = []
-        carry_files: list[dict[str, Any]] = []
-        pruned_files = 0
-        for fe in self.meta["files"]:
-            if fe["bucket"] not in per_bucket:
-                carry_files.append(fe)
-                continue
-            ur = u_ranges.get(fe["bucket"])
-            if (
-                ur is not None and "pk_min" in fe
-                and (fe["pk_max"] < ur[0] or fe["pk_min"] > ur[1])
-            ):
-                carry_files.append(fe)
-                pruned_files += 1
-            else:
-                target_files.append(fe)
-
-        obs = Observation()
-        new_files: list[dict[str, Any]] = []
-        if touched:
-            u_rows = spark.read.parquet(staging)  # partition discovery restores _bucket
-            # the anti join consumes the UNHINTED plan: its update side is
-            # the LEFT (streamed) side there, where a broadcast hint is
-            # invalid (Spark warns and ignores it) — AQE picks its strategy
-            u_rows_anti = u_rows
-            # broadcast only when the update set is genuinely small — a
-            # forced broadcast of a big batch builds its hash relation
-            # single-threaded on the driver (measured serial-fraction
-            # killer); above the threshold AQE picks the join from runtime
-            # stats of the staged files
-            if n_updates <= _BROADCAST_THRESHOLD:
-                u_rows = F.broadcast(u_rows)
-
-            tgt = self._read_files(spark, target_files)
-            tgt_b = tgt.withColumn("_bucket", self.bucket_expr())
-
-            newer = _commit_gt("u", "t")
-            # matched path: keep target unless the update is strictly newer
-            tcols = [F.col(f"t.{c}") for c in user_cols + ["_bucket"] + META_COLS]
-            ucols = [F.col(f"u.{c}") for c in user_cols + ["_bucket"] + META_COLS]
-            matched = (
-                tgt_b.alias("t")
-                .join(u_rows.alias("u"), on=F.col(f"t.{pk}") == F.col(f"u.{pk}"), how="left")
-                .select(
-                    F.when(F.col(f"u.{pk}").isNull() | ~newer, F.struct(*tcols))
-                    .otherwise(F.struct(*ucols))
-                    .alias("r"),
-                    (F.col(f"u.{pk}").isNotNull() & newer).alias("_applied"),
-                    F.col(f"u.{pk}").isNotNull().alias("_matched"),
-                )
-            )
-            # not-matched path: brand-new keys (incl. tombstones for deletes
-            # of unseen keys — guards against late older inserts
-            # resurrecting them)
-            unmatched = (
-                u_rows_anti.alias("u")
-                .join(tgt_b.select(pk).alias("t"), on=F.col(f"u.{pk}") == F.col(f"t.{pk}"), how="left_anti")
-                .select(F.struct(*[F.col(c) for c in user_cols + ["_bucket"] + META_COLS]).alias("r"),
-                        F.lit(True).alias("_applied"), F.lit(False).alias("_matched"))
-            )
-            result = matched.unionByName(unmatched).select("r.*", "_applied", "_matched")
-            result = result.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows_written"),
-                F.sum(F.when(F.col("_applied") & F.col("_matched") & F.col("_deleted"), 1).otherwise(0)).alias("deleted"),
-                F.sum(F.when(F.col("_applied") & F.col("_matched") & ~F.col("_deleted"), 1).otherwise(0)).alias("updated"),
-                F.sum(F.when(F.col("_applied") & ~F.col("_matched"), 1).otherwise(0)).alias("inserted"),
-                F.sum(F.when(~F.col("_applied") & F.col("_matched"), 1).otherwise(0)).alias("stale_or_kept"),
-            ).drop("_applied", "_matched")
-            new_files = self._write_data(spark, result, len(touched))
-            stats = {k: int(v) for k, v in observed(obs).items()}
-        else:
-            stats = {"rows_written": 0, "deleted": 0, "updated": 0, "inserted": 0, "stale_or_kept": 0}
-        shutil.rmtree(staging, ignore_errors=True)
-        stats.update(pruned_files=pruned_files, n_updates=n_updates, touched_buckets=len(touched))
-        return carry_files + new_files, stats
-
-    def _merge_mor(
-        self, spark: SparkSession, u_rows: DataFrame
-    ) -> tuple[list[dict[str, Any]], dict[str, Any]]:
-        """Append-only apply: (new file list, stats). Normalized update rows
-        land as delta files in their buckets; no target scan, no join.
-        Exactly-once and the commit-ts guard hold because read-time
-        resolution is the same arg-max the CoW guard implements."""
-        # ONE Spark pass total: the delta write IS the apply; update count
-        # and touched buckets come from the written parquet footers
-        new_files = self._write_data(spark, u_rows, self.meta["num_buckets"], kind="delta")
-        touched = {fe["bucket"] for fe in new_files if fe["rows"]}
-        stats = {"n_updates": sum(fe["rows"] for fe in new_files), "touched_buckets": len(touched),
-                 "delta_files": len(new_files)}
-        return self.meta["files"] + new_files, stats
-
     def _compaction_victims(self, files: list[dict[str, Any]]) -> list[int]:
+        """The buckets a merge compacts. ``cow``: every bucket that holds a
+        delta (soft trigger 0, ratio 0). ``mor``: a bucket compacts when
+        its delta FILE count passes the soft trigger AND its delta ROWS
+        reach compact_min_delta_ratio of its base rows (LSM-style
+        size-ratio — see the property docstrings: the file trigger alone
+        forces a full-table rewrite every max_deltas batches once steady
+        micro-batches touch every bucket), or unconditionally at the hard
+        file cap (read health). Manifests written before row counts
+        existed fall back to the file trigger alone."""
         d_files: dict[int, int] = {}
         d_rows: dict[int, int] = {}
         b_rows: dict[int, int] = {}
@@ -507,8 +388,11 @@ class SnapshotTable:
                 d_rows[b] = d_rows.get(b, 0) + fe.get("rows", 0)
             else:
                 b_rows[b] = b_rows.get(b, 0) + fe.get("rows", 0)
-        soft, hard = self.max_deltas_per_bucket, self.hard_max_deltas_per_bucket
-        ratio = self.compact_min_delta_ratio
+        if self.merge_mode == "mor":
+            soft, ratio = self.max_deltas_per_bucket, self.compact_min_delta_ratio
+        else:
+            soft, ratio = 0, 0.0
+        hard = self.hard_max_deltas_per_bucket
         out = []
         for b, n in d_files.items():
             if n <= soft:
@@ -521,28 +405,62 @@ class SnapshotTable:
 
     def compact(self, spark: SparkSession, buckets: list[int] | None = None) -> dict[str, Any]:
         """Collapse base+delta files of the given buckets (default: every
-        bucket with deltas) into fresh base files via read-time arg-max."""
+        bucket with deltas) into fresh base files via read-time arg-max.
+
+        File-level pruning (the Iceberg column-stats analogue): in a bucket
+        with deltas, a base file whose pk [min, max] meets no delta's range
+        holds no key any delta carries — it is kept as is, not rewritten,
+        and counted in ``pruned_files``. Sound because a bucket's base
+        files are key-disjoint: each is arg-max output, and the rewrite of
+        the rest never overlaps a kept file's range. A delta without a
+        range (legacy entry, binary pk) turns pruning off for its bucket."""
         files = self.meta["files"]
         if buckets is None:
             buckets = sorted({fe["bucket"] for fe in files if fe.get("kind") == "delta"})
         bucket_set = set(buckets)
-        victims = [fe for fe in files if fe["bucket"] in bucket_set]
-        keep = [fe for fe in files if fe["bucket"] not in bucket_set]
+        d_ranges: dict[int, list[tuple[Any, Any]]] = {}
+        unranged: set[int] = set()
+        for fe in files:
+            if fe["bucket"] in bucket_set and fe.get("kind") == "delta":
+                if "pk_min" in fe:
+                    d_ranges.setdefault(fe["bucket"], []).append((fe["pk_min"], fe["pk_max"]))
+                else:
+                    unranged.add(fe["bucket"])
+
+        def rewrite(fe: dict[str, Any]) -> bool:
+            b = fe["bucket"]
+            if b not in bucket_set:
+                return False
+            if fe.get("kind") == "delta" or "pk_min" not in fe or b in unranged or b not in d_ranges:
+                return True
+            return any(lo <= fe["pk_max"] and fe["pk_min"] <= hi for lo, hi in d_ranges[b])
+
+        victims: list[dict[str, Any]] = []
+        keep: list[dict[str, Any]] = []
+        for fe in files:
+            (victims if rewrite(fe) else keep).append(fe)
+        pruned = sum(1 for fe in keep if fe["bucket"] in bucket_set)
         if not victims:
-            return {"compacted": 0, "version": self.meta["version"]}
+            return {"compacted": 0, "pruned_files": pruned, "version": self.meta["version"]}
         resolved = argmax_rows(self._read_files(spark, victims), self.pk_col, _COMMIT_ORDER)
-        # tombstone GC: the resolved-timestamp frontier guarantees no event
-        # below it can still arrive (W1), so a delete tombstone older than
-        # the frontier has nothing left to guard against — purge it
+        # tombstone GC (MoR only): the resolved-timestamp frontier says no
+        # event below it can still arrive (W1), so a delete tombstone older
+        # than the frontier has nothing left to guard against — purge it.
+        # W1 holds only for in-order delivery; the file source can deliver
+        # a later file first, and an older insert arriving after the purge
+        # resurrects its key. CoW keeps its tombstones, so its state never
+        # depends on delivery order.
         frontier_wall = int(self.meta["frontier"]["wall_ns"])
-        if frontier_wall > 0:
+        if frontier_wall > 0 and self.merge_mode == "mor":
             resolved = resolved.filter(
                 ~(F.col("_deleted") & (F.col("_commit_wall_ns") < frontier_wall))
             )
         resolved = resolved.withColumn("_bucket", self.bucket_expr())
         new_files = self._write_data(spark, resolved, len(bucket_set))
-        version = self._commit(keep + new_files, {"op": "compact", "buckets": buckets})
-        return {"compacted": len(buckets), "version": version}
+        version = self._commit(
+            keep + new_files, {"op": "compact", "buckets": buckets, "pruned_files": pruned}
+        )
+        return {"compacted": len(buckets), "pruned_files": pruned, "version": version}
 
     # ---------------- write + commit ----------------
 
@@ -659,8 +577,7 @@ class SnapshotTable:
 
     def gc_orphans(self, retain_versions: int = 2) -> dict[str, int]:
         """Remove data files not referenced by the current snapshot and
-        metadata/staging left behind by superseded commits or crashed
-        writers (Iceberg's remove-orphan-files + expire-snapshots). Call
+        metadata left behind by superseded commits or crashed writers (Iceberg's remove-orphan-files + expire-snapshots). Call
         only when no reader is pinned to an older snapshot and no writer is
         mid-merge — the same operational contract as Iceberg's maintenance
         actions. ``retain_versions`` keeps that many trailing metadata
@@ -668,7 +585,7 @@ class SnapshotTable:
         superseded versions are removed regardless — they are what costs
         storage at 10^10 rows)."""
         referenced = {os.path.normpath(fe["path"]) for fe in self.meta["files"]}
-        removed_data = removed_meta = removed_staging = 0
+        removed_data = removed_meta = 0
         surviving: set[str] = set()  # data paths still on disk after expiry
         data_root = os.path.join(self.path, "data")
         if os.path.isdir(data_root):
@@ -687,11 +604,6 @@ class SnapshotTable:
                 for root, dirs, fns in list(os.walk(vpath, topdown=False)):
                     if not os.listdir(root):
                         os.rmdir(root)
-        staging_root = os.path.join(self.path, "staging")
-        if os.path.isdir(staging_root):
-            for d in os.listdir(staging_root):
-                shutil.rmtree(os.path.join(staging_root, d), ignore_errors=True)
-                removed_staging += 1
         mdir = os.path.join(self.path, "metadata")
         keep_from = self.meta["version"] - max(retain_versions - 1, 0)
         for fn in os.listdir(mdir):
@@ -728,8 +640,7 @@ class SnapshotTable:
             ):
                 os.remove(os.path.join(mdir, fn))
                 removed_meta += 1
-        return {"data_files": removed_data, "metadata_files": removed_meta,
-                "staging_dirs": removed_staging}
+        return {"data_files": removed_data, "metadata_files": removed_meta}
 
 
 def _write_buckets(spark: SparkSession, rows: DataFrame, n_buckets: int, out_dir: str) -> None:
@@ -799,41 +710,13 @@ def _scan_bucket_dir(root: str, pk: str | None) -> list[dict[str, Any]]:
     ]
 
 
-def _staged_stats(root: str, pk: str | None = None) -> tuple[int, dict[int, int], dict[int, tuple]]:
-    """(total rows, rows per bucket, pk-range per bucket) of a
-    ``_bucket=``-partitioned parquet dir, from file footers — driver-side
-    metadata only, no Spark job (exactly what Iceberg manifests store)."""
-    per_bucket: dict[int, int] = {}
-    ranges: dict[int, tuple] = {}
-    complete: dict[int, bool] = {}
-    for e in _scan_bucket_dir(root, pk):
-        b = e["bucket"]
-        per_bucket[b] = per_bucket.get(b, 0) + e["rows"]
-        if pk is not None:
-            if e["range"] is None:
-                complete[b] = False
-            elif complete.get(b, True):
-                complete[b] = True
-                mn, mx = e["range"]
-                if b in ranges:
-                    ranges[b] = (min(ranges[b][0], mn), max(ranges[b][1], mx))
-                else:
-                    ranges[b] = (mn, mx)
-    for b, ok in complete.items():
-        if not ok:
-            ranges.pop(b, None)
-    per_bucket = {b: n for b, n in per_bucket.items() if n}
-    ranges = {b: r for b, r in ranges.items() if b in per_bucket}
-    return sum(per_bucket.values()), per_bucket, ranges
-
-
 def _collect_data_files(
     table_path: str, out_dir: str, rel_dir: str, sid: int,
     pk: str | None = None, kind: str | None = None,
 ) -> list[dict[str, Any]]:
     """Manifest entries for a freshly-written ``_bucket=``-partitioned dir,
     with per-file pk min/max from the footers (the Iceberg column-stats
-    analogue; drives file-level pruning in the CoW merge)."""
+    analogue; drives file-level pruning in compaction)."""
     files: list[dict[str, Any]] = []
     for e in _scan_bucket_dir(out_dir, pk):
         fe: dict[str, Any] = {
@@ -850,13 +733,6 @@ def _collect_data_files(
             fe["pk_min"], fe["pk_max"] = e["range"]
         files.append(fe)
     return files
-
-
-def _commit_gt(a: str, b: str):
-    """(wall, logical, seq) lexicographic strictly-greater between aliases."""
-    return F.struct(*[F.col(f"{a}.{c}") for c in _COMMIT_ORDER]) > F.struct(
-        *[F.col(f"{b}.{c}") for c in _COMMIT_ORDER]
-    )
 
 
 def _json_safe(v: Any) -> bool:

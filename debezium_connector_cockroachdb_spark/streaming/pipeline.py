@@ -59,6 +59,9 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("n_updates", T.LongType(), True),
         T.StructField("min_seq", T.LongType(), True),
         T.StructField("max_seq", T.LongType(), True),
+        # per-key outcome counts: one arg-max cannot tell matched keys from
+        # new ones, so these four always read NULL (kept for readers of
+        # existing metrics tables)
         T.StructField("inserted", T.LongType(), True),
         T.StructField("updated", T.LongType(), True),
         T.StructField("deleted", T.LongType(), True),
@@ -94,11 +97,10 @@ class IngestConfig:
     errors_path: str | None = None  # dead-letter quarantine for poison events (X3)
     merge_mode: str = "cow"  # "cow" (read-optimized) | "mor" (write-optimized)
     mor_max_deltas_per_bucket: int = 8
-    # size-ratio gate + hard file cap on MoR auto-compaction (see
-    # lake.SnapshotTable.compact_min_delta_ratio / hard_max_deltas_per_bucket;
-    # ratio 0 reproduces the pure file-count trigger)
+    # size-ratio gate on MoR auto-compaction (see
+    # lake.SnapshotTable.compact_min_delta_ratio; ratio 0 reproduces the
+    # pure file-count trigger)
     mor_compact_min_delta_ratio: float = 0.2
-    mor_hard_max_deltas_per_bucket: int | None = None
     # "poll": check the schema registry's version once per micro-batch
     #   (O(1) driver-side; evolving one batch early is safe — add-column and
     #   widen are backward compatible, pre-DDL rows null-fill either way).
@@ -320,11 +322,6 @@ class CDCPipeline:
                     "write.merge.mode": cfg.merge_mode,
                     "mor.max-deltas-per-bucket": str(cfg.mor_max_deltas_per_bucket),
                     "mor.compact-min-delta-ratio": str(cfg.mor_compact_min_delta_ratio),
-                    "mor.hard-max-deltas-per-bucket": str(
-                        cfg.mor_hard_max_deltas_per_bucket
-                        if cfg.mor_hard_max_deltas_per_bucket is not None
-                        else 8 * cfg.mor_max_deltas_per_bucket
-                    ),
                 },
             )
 
@@ -653,7 +650,7 @@ class CDCPipeline:
         row["table_version"] = stats.get("version")
         row["skipped_replay"] = bool(stats.get("skipped", False))
         for k in ("n_raw", "n_control", "n_data", "n_malformed", "n_keyless", "n_updates", "min_seq", "max_seq",
-                  "inserted", "updated", "deleted", "stale_or_kept", "touched_buckets"):
+                  "touched_buckets"):
             if stats.get(k) is not None:
                 row[k] = int(stats[k])
         row["frontier_hlc"] = stats.get("frontier_hlc")

@@ -1,7 +1,8 @@
-"""Snapshot-table semantics: atomic versioned commits, bucket-pruned CoW
-merge with commit-ts guard, exactly-once batch replay, tombstones, schema
-evolution (SURVEY §2.5, §2.10; W2/W5)."""
+"""Snapshot-table semantics: atomic versioned commits, bucket-pruned
+delta-then-compact merge with commit-ts order, exactly-once batch replay,
+tombstones, schema evolution (SURVEY §2.5, §2.10; W2/W5)."""
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -61,8 +62,7 @@ def test_stale_update_is_noop(spark, tmp_table_dir):
     must not overwrite newer state."""
     t = mk(tmp_table_dir)
     t.merge(spark, upd(spark, [("a", [5], 1, "cc", "u", 500, 0, 10)]), "b1")
-    r = t.merge(spark, upd(spark, [("a", [1], 1, "cc", "u", 100, 0, 20)]), "b2")
-    assert r["stale_or_kept"] == 1 and r["updated"] == 0
+    t.merge(spark, upd(spark, [("a", [1], 1, "cc", "u", 100, 0, 20)]), "b2")
     assert list(state(spark, t)["a"]["tokens"]) == [5]
 
 
@@ -227,7 +227,6 @@ def test_snapshot_isolation_for_pinned_readers(spark, tmp_table_dir):
 def test_evolve_rejects_pk_drop_and_type_change(spark, tmp_table_dir):
     """Bucket membership is frozen under xxhash64(pk) at the pk's type —
     evolution must reject pk drops and pk type changes."""
-    import pytest
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -249,42 +248,99 @@ def test_evolve_rejects_pk_drop_and_type_change(spark, tmp_table_dir):
     ]))
 
 
-def test_cow_merge_prunes_nonoverlapping_files(spark, tmp_table_dir):
-    """File-level pk-stats pruning: a target file whose pk [min,max] can't
-    intersect the update range is carried, not rewritten (the Iceberg
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_merge_prunes_nonoverlapping_files(spark, tmp_table_dir, mode):
+    """File-level pk-stats pruning: a base file whose pk [min,max] can't
+    intersect any delta's range is carried, not rewritten (the Iceberg
     column-stats analogue — at 10^10 rows a point-y batch rewrites only
-    the overlapping files of a bucket)."""
+    the overlapping files of a bucket). Both modes prune in compaction;
+    under MoR each merge is followed by an explicit compact."""
     from pyspark.sql import types as T
 
     schema = T.StructType([
         T.StructField("doc_id", T.StringType(), True),
         T.StructField("v", T.IntegerType(), True),
     ])
-    t = SnapshotTable.create(tmp_table_dir, schema, "doc_id", num_buckets=1)
+    t = SnapshotTable.create(tmp_table_dir, schema, "doc_id", num_buckets=1,
+                             properties={"write.merge.mode": mode})
     mk = lambda rows: spark.createDataFrame(
         rows, "doc_id string, v int, op string, commit_wall_ns long, commit_logical long, seq long"
     )
-    t.merge(spark, mk([(f"k00{i}", i, "c", 100, 0, i) for i in range(10)]), "bA")
+
+    def apply(rows, key):
+        s = t.merge(spark, mk(rows), key)
+        return t.compact(spark) if mode == "mor" else s
+
+    apply([(f"k00{i}", i, "c", 100, 0, i) for i in range(10)], "bA")
     low_files = [fe["path"] for fe in t.meta["files"]]
     assert all("pk_min" in fe for fe in t.meta["files"])
 
     # disjoint key range: the low-range file must be pruned, not rewritten
-    s2 = t.merge(spark, mk([(f"k10{i}", 100 + i, "c", 200, 0, 100 + i) for i in range(10)]), "bB")
+    s2 = apply([(f"k10{i}", 100 + i, "c", 200, 0, 100 + i) for i in range(10)], "bB")
     assert s2["pruned_files"] == len(low_files)
     assert set(low_files) <= {fe["path"] for fe in t.meta["files"]}
     assert t.read_state(spark).count() == 20
 
     # overlapping update rewrites only the high-range file
-    s3 = t.merge(spark, mk([("k105", 999, "u", 300, 0, 999)]), "bC")
+    s3 = apply([("k105", 999, "u", 300, 0, 999)], "bC")
     assert s3["pruned_files"] >= 1
     assert set(low_files) <= {fe["path"] for fe in t.meta["files"]}
     rows = {r["doc_id"]: r["v"] for r in t.read_state(spark).collect()}
     assert rows["k105"] == 999 and rows["k003"] == 3 and len(rows) == 20
 
 
+def test_cow_state_exact_between_delta_and_compaction_commits(spark, tmp_table_dir, monkeypatch):
+    """A CoW merge commits its delta, then compacts. If the compaction
+    fails in between, reads still resolve the delta exactly, and the next
+    merge compacts the leftover bucket along with its own."""
+    t = mk(tmp_table_dir)
+    t.merge(spark, upd(spark, [("a", [1], 1, "cc", "c", 100, 0, 1),
+                               ("b", [2], 1, "cc", "c", 100, 0, 2)]), "b1")
+    compact = SnapshotTable.compact
+    failed = []
+
+    def compact_fails_once(self, *args, **kwargs):
+        if not failed:
+            failed.append(True)
+            raise RuntimeError("injected compaction failure")
+        return compact(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "compact", compact_fails_once)
+    with pytest.raises(RuntimeError, match="injected"):
+        t.merge(spark, upd(spark, [("a", [9], 1, "cc", "u", 200, 0, 3)]), "b2")
+
+    t = SnapshotTable.load(tmp_table_dir)
+    leftover = {fe["bucket"] for fe in t.meta["files"] if fe.get("kind") == "delta"}
+    assert leftover and "b2" in t.meta["applied"]
+    assert {k: list(v["tokens"]) for k, v in state(spark, t).items()} == {"a": [9], "b": [2]}
+
+    # the next merge touches another bucket and still folds the leftover
+    keys = spark.createDataFrame([(k,) for k in "cdefghij"], "doc_id string")
+    other = next(r["doc_id"] for r in keys.select("doc_id", t.bucket_expr().alias("b")).collect()
+                 if r["b"] not in leftover)
+    r = t.merge(spark, upd(spark, [(other, [3], 1, "cc", "c", 300, 0, 4)]), "b3")
+    assert r["compacted_buckets"] == len(leftover) + 1
+    assert not [fe for fe in t.meta["files"] if fe.get("kind") == "delta"]
+    assert {k: list(v["tokens"]) for k, v in state(spark, t).items()} == {
+        "a": [9], "b": [2], other: [3]}
+
+
+def test_cow_keeps_tombstones_past_the_frontier(spark, tmp_table_dir):
+    """The file source can deliver a later file first, so a batch's
+    resolved frontier does not bound what is still to come. A CoW delete
+    stays a tombstone through compaction and still shadows an older insert
+    delivered after the frontier passed it."""
+    t = mk(tmp_table_dir)
+    t.merge(spark, upd(spark, [("a", None, None, None, "d", 500, 0, 10)]), "b1",
+            frontier=lambda: "1000.0000000000")
+    assert [r["_deleted"] for r in t.read_raw(spark).collect()] == [True]
+    t.merge(spark, upd(spark, [("a", [1], 1, "cc", "c", 100, 0, 5)]), "b2")
+    assert state(spark, t) == {}
+
+
 def test_gc_orphans_removes_unreferenced(spark, tmp_table_dir):
-    """Orphan GC: data files superseded by later commits (and staging junk
-    from crashed writers) are removed; the current snapshot is untouched."""
+    """Orphan GC: data files superseded by later commits are removed; the
+    current snapshot is untouched."""
     import os as _os
 
     from pyspark.sql import types as T
@@ -300,8 +356,6 @@ def test_gc_orphans_removes_unreferenced(spark, tmp_table_dir):
     for b in range(3):  # successive rewrites leave superseded files behind
         t.merge(spark, mk([(f"k{i}", b * 10 + i, "u" if b else "c", 100 + b, 0, b * 100 + i)
                            for i in range(6)]), f"b{b}")
-    # simulate a crashed writer's staging leftovers
-    _os.makedirs(_os.path.join(tmp_table_dir, "staging", "dead_batch"), exist_ok=True)
     before_state = sorted((r["doc_id"], r["v"]) for r in t.read_state(spark).collect())
 
     all_files = []
@@ -312,7 +366,6 @@ def test_gc_orphans_removes_unreferenced(spark, tmp_table_dir):
 
     gone = t.gc_orphans(retain_versions=2)
     assert gone["data_files"] == len(all_files) - referenced
-    assert gone["staging_dirs"] == 1
     after_state = sorted((r["doc_id"], r["v"]) for r in t.read_state(spark).collect())
     assert after_state == before_state
     # re-load still works (current metadata retained)
@@ -322,7 +375,6 @@ def test_gc_orphans_removes_unreferenced(spark, tmp_table_dir):
 def test_concurrent_commit_detected(spark, tmp_table_dir):
     """Optimistic-concurrency guard: a second writer handle that never saw
     the first writer's commit must fail loudly instead of clobbering it."""
-    import pytest
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -351,7 +403,6 @@ def test_time_travel_reads_pinned_versions(spark, tmp_table_dir):
     now = SnapshotTable.load(tmp_table_dir)
     assert set(r["doc_id"] for r in now.read_state(spark).collect()) == {"a", "b"}
     # a time-travel handle is read-only in practice: the OCC guard refuses its writes
-    import pytest
     with pytest.raises(RuntimeError, match="concurrent commit"):
         past.merge(spark, upd(spark, [("z", [9], 1, "cc", "c", 900, 0, 9)]), "bz")
     with pytest.raises(FileNotFoundError, match="not retained"):
@@ -391,7 +442,6 @@ def test_gc_orphans_expires_unreadable_time_travel_versions(spark, tmp_table_dir
     were expired must be dropped too, so load(version=) fails fast with
     the 'not retained' error instead of succeeding and then failing
     mid-scan on missing parquet."""
-    import pytest
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -402,14 +452,14 @@ def test_gc_orphans_expires_unreadable_time_travel_versions(spark, tmp_table_dir
     mk = lambda rows: spark.createDataFrame(
         rows, "doc_id string, v int, op string, commit_wall_ns long, commit_logical long, seq long"
     )
-    # v1 then v2 rewrite the SAME keys → v1's files are orphans after v2
-    t.merge(spark, mk([(f"k{i}", i, "c", 100, 0, i) for i in range(4)]), "b1")
+    # b1 then b2 rewrite the SAME keys → b1's files are orphans after b2
+    v1 = t.merge(spark, mk([(f"k{i}", i, "c", 100, 0, i) for i in range(4)]), "b1")["version"]
     t.merge(spark, mk([(f"k{i}", 10 + i, "u", 200, 0, 100 + i) for i in range(4)]), "b2")
 
-    t.gc_orphans(retain_versions=3)  # retains v1/v2 manifests by count...
+    t.gc_orphans(retain_versions=t.meta["version"] - v1 + 1)  # retains v1's manifest by count...
     # ...but v1's data is gone, so its manifest must have been expired too
     with pytest.raises(FileNotFoundError, match="not retained"):
-        SnapshotTable.load(tmp_table_dir, version=1)
+        SnapshotTable.load(tmp_table_dir, version=v1)
     # the current version stays fully readable
     cur = SnapshotTable.load(tmp_table_dir)
     assert sorted(r["v"] for r in cur.read_state(spark).collect()) == [10, 11, 12, 13]
