@@ -25,10 +25,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.hashing import MD5_48_DUCKDB_TEMPLATE, MINHASH_A, MINHASH_B, MINHASH_P, md5_48
 from ..functions.hlc import hlc_logical, hlc_wall_ns
 from ..operators import components, multimodal, similarity, text, text_dedup
+from ..operators.dedup import argmax_rows
+from ..sources.lake import SnapshotTable
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -152,21 +155,17 @@ def _op_col() -> F.Column:
 # --------------------------------------------------------------------------
 
 def q_cdc_last_writer_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D1 last-writer-wins as arg-max aggregation (map-side combinable —
-    the hot-key-safe form of `row_number()=1`)."""
-    ev = _t(spark, sf_dir, "events")
-    packed = F.struct(
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"), F.col("event_id"),
-        F.col("event_type"), F.col("value"),
-    )
-    w = ev.groupBy("user_id").agg(F.max(packed).alias("w"))
-    return w.select(
+    """D1 last-writer-wins through the engine's one arg-max,
+    ``operators/dedup.argmax_rows``: per user, the event with the greatest
+    (ts, event_id) tuple."""
+    ev = _t(spark, sf_dir, "events").select(
         "user_id",
-        F.col("w.ts_us").alias("last_ts_us"),
-        F.col("w.event_id").alias("last_event_id"),
-        F.col("w.event_type").alias("last_event_type"),
-        F.col("w.value").alias("last_value"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("last_ts_us"),
+        F.col("event_id").alias("last_event_id"),
+        F.col("event_type").alias("last_event_type"),
+        F.col("value").alias("last_value"),
     )
+    return argmax_rows(ev, "user_id", ["last_ts_us", "last_event_id"])
 
 
 SQL_CDC_LWW = """
@@ -232,27 +231,57 @@ FROM events
 """
 
 
+def _cdc_applied(spark: SparkSession, sf_dir: str, mode: str) -> tuple[SnapshotTable, int]:
+    """The customer base merged as ``b1`` ('c', wall 1), then the events'
+    last-writer-wins updates as ``b2`` ('u', or 'd' where the last event is
+    an error, wall 2), into a fresh 8-bucket ``SnapshotTable`` with
+    ``write.merge.mode=mode``. Returns the table and v1, its version after
+    ``b1``. Each call gets its own table directory (removed at exit), so an
+    earlier call's still-lazy result keeps its files."""
+    path = os.path.join(_WORK, "cdc_applied", f"{mode}_{uuid.uuid4().hex[:12]}")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    schema = T.StructType([
+        T.StructField("ck", T.LongType(), True),
+        T.StructField("name", T.StringType(), True),
+        T.StructField("balance", T.DoubleType(), True),
+    ])
+    table = SnapshotTable.create(
+        path, schema, "ck", num_buckets=8, properties={"write.merge.mode": mode}
+    )
+    base = _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("ck"), F.col("c_name").alias("name"),
+        F.round(F.col("c_acctbal").cast("double"), 2).alias("balance"),
+        F.lit("c").alias("op"), F.lit(1).cast("long").alias("commit_wall_ns"),
+        F.lit(0).cast("long").alias("commit_logical"), F.col("c_custkey").alias("seq"),
+    )
+    table.merge(spark, base, "b1")
+    v1 = table.meta["version"]
+    upd = q_cdc_last_writer_wins(spark, sf_dir).select(
+        (F.col("user_id") + 1).alias("ck"),
+        F.concat(F.lit("user-"), F.col("user_id").cast("string")).alias("name"),
+        F.round(F.col("last_value"), 2).alias("balance"),
+        F.when(F.col("last_event_type") == "error", F.lit("d")).otherwise(F.lit("u")).alias("op"),
+        F.lit(2).cast("long").alias("commit_wall_ns"),
+        F.lit(0).cast("long").alias("commit_logical"),
+        (F.col("user_id") + 1).alias("seq"),
+    )
+    table.merge(spark, upd, "b2")
+    return table, v1
+
+
 def q_cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.5 MERGE semantics relationally: last event per key applied onto
-    the customer base — delete removes, update rewrites, others keep."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
-    lww = q_cdc_last_writer_wins(spark, sf_dir).select(
-        (F.col("user_id") + 1).alias("c_custkey"),
-        F.col("last_event_type"),
-        F.col("last_value"),
-    )
-    joined = cust.join(F.broadcast(lww), "c_custkey", "left")
-    return (
-        joined.filter(F.col("last_event_type").isNull() | (F.col("last_event_type") != "error"))
-        .select(
-            "c_custkey",
-            F.when(F.col("last_event_type").isNotNull(),
-                   F.concat(F.lit("user-"), (F.col("c_custkey") - 1).cast("string")))
-            .otherwise(F.col("c_name")).alias("name"),
-            F.when(F.col("last_event_type").isNotNull(), F.round(F.col("last_value"), 2))
-            .otherwise(F.round(F.col("c_acctbal").cast("double"), 2)).alias("balance"),
-        )
-    )
+    """§2.5 MERGE through the engine: the last event per key applied onto
+    the customer base by ``SnapshotTable.merge`` (delete removes, update
+    rewrites, others keep), read back by ``read_state``. A MoR table that
+    compacted nothing must read the same state through read-time
+    resolution."""
+    cow, _ = _cdc_applied(spark, sf_dir, "cow")
+    mor, _ = _cdc_applied(spark, sf_dir, "mor")
+    assert {fe.get("kind") for fe in mor.meta["files"]} == {"delta"}, "MoR table compacted"
+    s_cow, s_mor = cow.read_state(spark), mor.read_state(spark)
+    assert s_cow.exceptAll(s_mor).isEmpty() and s_mor.exceptAll(s_cow).isEmpty(), \
+        "MoR read-time resolution disagrees with CoW state"
+    return s_cow.select(F.col("ck").alias("c_custkey"), "name", "balance")
 
 
 SQL_CDC_MERGE_APPLY = """
@@ -273,44 +302,12 @@ WHERE l.last_event_type IS NULL OR l.last_event_type <> 'error'
 """
 
 
-_CDF_TABLE = os.path.join(_WORK, "cdf_table")
-
-
 def q_table_changes_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDF read behind the hard gate: customer base merged as v1, the
-    events LWW batch applied as v2, then ``table_changes(v1)`` must emit
+    events LWW batch applied after it, then ``table_changes(v1)`` must emit
     exactly the row-level diffs — update_postimage for surviving events,
     delete (with pre-image) where the last event is an error."""
-    from pyspark.sql import types as T
-
-    from ..sources.lake import SnapshotTable
-
-    shutil.rmtree(_CDF_TABLE, ignore_errors=True)
-    schema = T.StructType([
-        T.StructField("ck", T.LongType(), True),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("balance", T.DoubleType(), True),
-    ])
-    table = SnapshotTable.create(_CDF_TABLE, schema, "ck", num_buckets=8)
-    base = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("ck"), F.col("c_name").alias("name"),
-        F.round(F.col("c_acctbal").cast("double"), 2).alias("balance"),
-        F.lit("c").alias("op"), F.lit(1).cast("long").alias("commit_wall_ns"),
-        F.lit(0).cast("long").alias("commit_logical"), F.col("c_custkey").alias("seq"),
-    )
-    table.merge(spark, base, "b1")
-    v1 = table.meta["version"]
-    lww = q_cdc_last_writer_wins(spark, sf_dir)
-    upd = lww.select(
-        (F.col("user_id") + 1).alias("ck"),
-        F.concat(F.lit("user-"), F.col("user_id").cast("string")).alias("name"),
-        F.round(F.col("last_value"), 2).alias("balance"),
-        F.when(F.col("last_event_type") == "error", F.lit("d")).otherwise(F.lit("u")).alias("op"),
-        F.lit(2).cast("long").alias("commit_wall_ns"),
-        F.lit(0).cast("long").alias("commit_logical"),
-        (F.col("user_id") + 1).alias("seq"),
-    )
-    table.merge(spark, upd, "b2")
+    table, v1 = _cdc_applied(spark, sf_dir, "cow")
     return table.table_changes(spark, v1).select(
         "ck", "name", "balance", F.col("_change_type").alias("change_type")
     )
@@ -528,10 +525,7 @@ def q_schema_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds columns with defaults — a literal default ('PENDING', 42) fills
     pre-DDL rows at read; a function default (now()) stays null
     (CockroachDBDefaultValueConverter.java:41-59,164-210)."""
-    from pyspark.sql import types as T
-
     from ..functions.converters import ColumnSpec
-    from ..sources.lake import SnapshotTable
     from ..streaming.pipeline import registry_defaults
 
     shutil.rmtree(_DEFAULTS_TABLE, ignore_errors=True)

@@ -26,9 +26,10 @@ are identical):
      with 4096 buckets, a micro-batch touching 1% of keys rewrites ~41
      buckets, not the table, and within them only the base files whose pk
      range meets a delta's. Deletes persist as tombstone rows
-     (``_deleted``) so the commit-timestamp order keeps working for
-     late/out-of-order events that arrive after the delete; MoR compaction
-     purges tombstones below the resolved frontier.
+     (``_deleted``) in both modes, through compaction too, so the
+     commit-timestamp order keeps working for late/out-of-order events
+     that arrive after the delete: the state depends only on which events
+     were applied, never on the order files were delivered in.
   4. **Schema evolution** — add-column / type-widen are metadata-only
      commits; old data files are aligned (null-fill / cast) at read time,
      exactly Iceberg's lazy evolution.
@@ -442,20 +443,9 @@ class SnapshotTable:
         pruned = sum(1 for fe in keep if fe["bucket"] in bucket_set)
         if not victims:
             return {"compacted": 0, "pruned_files": pruned, "version": self.meta["version"]}
-        resolved = argmax_rows(self._read_files(spark, victims), self.pk_col, _COMMIT_ORDER)
-        # tombstone GC (MoR only): the resolved-timestamp frontier says no
-        # event below it can still arrive (W1), so a delete tombstone older
-        # than the frontier has nothing left to guard against — purge it.
-        # W1 holds only for in-order delivery; the file source can deliver
-        # a later file first, and an older insert arriving after the purge
-        # resurrects its key. CoW keeps its tombstones, so its state never
-        # depends on delivery order.
-        frontier_wall = int(self.meta["frontier"]["wall_ns"])
-        if frontier_wall > 0 and self.merge_mode == "mor":
-            resolved = resolved.filter(
-                ~(F.col("_deleted") & (F.col("_commit_wall_ns") < frontier_wall))
-            )
-        resolved = resolved.withColumn("_bucket", self.bucket_expr())
+        resolved = argmax_rows(
+            self._read_files(spark, victims), self.pk_col, _COMMIT_ORDER
+        ).withColumn("_bucket", self.bucket_expr())
         new_files = self._write_data(spark, resolved, len(bucket_set))
         version = self._commit(
             keep + new_files, {"op": "compact", "buckets": buckets, "pruned_files": pruned}

@@ -6,11 +6,11 @@ CockroachDBConnectorTask.java:79-189): here a snapshot *batch* phase
 (initial scan, op='r' — W4) followed by a checkpointed Structured Streaming
 phase whose every micro-batch runs:
 
-    parse (one from_json pass)                         [P1 P2 C1-C15 D2]
-    → drift check + schema evolution                    [E1 E2 E3]
+    drift check + schema evolution, before the parse   [E1 E2 E3]
+    → parse (one from_json pass)                        [P1 P2 C1-C15 D2]
     → control/data split, frontier advance              [F1 F2 W1 W3]
     → per-key last-writer-wins arg-max                  [D1]
-    → bucket-pruned MERGE with commit-ts guard          [§2.5, W5]
+    → MERGE: delta write + commit, then compaction      [§2.5, W5]
     → lineage/metrics row                               [§2.6]
 
 Exactly-once = checkpointed source offsets (W2) + batch_key idempotence in
@@ -59,13 +59,6 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("n_updates", T.LongType(), True),
         T.StructField("min_seq", T.LongType(), True),
         T.StructField("max_seq", T.LongType(), True),
-        # per-key outcome counts: one arg-max cannot tell matched keys from
-        # new ones, so these four always read NULL (kept for readers of
-        # existing metrics tables)
-        T.StructField("inserted", T.LongType(), True),
-        T.StructField("updated", T.LongType(), True),
-        T.StructField("deleted", T.LongType(), True),
-        T.StructField("stale_or_kept", T.LongType(), True),
         T.StructField("touched_buckets", T.LongType(), True),
         T.StructField("frontier_hlc", T.StringType(), True),
         T.StructField("skipped_replay", T.BooleanType(), True),

@@ -1,6 +1,6 @@
 """Physical-plan assertions: the plans we designed for are the plans
-Catalyst actually produces (SURVEY §4 — pushdown, broadcast, map-side
-partial reduction before every shuffle)."""
+Catalyst actually produces (SURVEY §4 — pushdown, map-side partial
+reduction before every shuffle)."""
 
 import re
 
@@ -65,34 +65,6 @@ def test_last_writer_wins_is_partial_window_group_limit(spark, tmp_path):
         )
     )
     assert limits["Partial"] < exchanges[0] < limits["Final"], plan
-
-
-def test_merge_broadcasts_small_update_side(spark, tmp_path):
-    """The CoW merge join must broadcast the updates (never shuffle the
-    target) when below the threshold."""
-    from pyspark.sql import types as T
-
-    from debezium_connector_cockroachdb_spark.sources.lake import SnapshotTable
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType(), True),
-        T.StructField("v", T.IntegerType(), True),
-    ])
-    t = SnapshotTable.create(str(tmp_path / "t"), schema, "doc_id", num_buckets=4)
-    mk = lambda rows: spark.createDataFrame(
-        rows, "doc_id string, v int, op string, commit_wall_ns long, commit_logical long, seq long"
-    )
-    t.merge(spark, mk([(f"k{i}", i, "c", 100, 0, i) for i in range(50)]), "b1")
-
-    # capture the executed join strategy of a second merge via the plan of
-    # an equivalent join (merge internals don't expose their DataFrame) —
-    # smoke-check that Catalyst picks BroadcastHashJoin for this shape
-    tgt = t.read_raw(spark)
-    upd = F.broadcast(mk([("k1", 99, "u", 200, 0, 99)]))
-    joined = tgt.alias("t").join(upd.alias("u"), F.col("t.doc_id") == F.col("u.doc_id"), "left")
-    plan = plan_of(joined)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_exact_topk_is_two_stage_bounded(spark):
